@@ -949,9 +949,9 @@ object SparkEntry {
       graft.streaming.IncrementalGoldStream.rfmViaStream(s, dir)
         .orderBy(col("user_id"))),
 
-    // ---- streaming: the ADDITIVE maintainer through the same replay —
-    // per-batch partial aggregates merge-add into the mart (q07's
-    // oracle; exact because money rides integral 1e-4 cents) ----
+    // ---- streaming: daily trends through the same replay — each
+    // micro-batch rebuilds the replayed day from the silver landed so
+    // far (key-scoped on creation_date; q07's oracle) ----
     "q139_stream_incremental_trends" -> ((s, dir) =>
       graft.streaming.IncrementalGoldStream.trendsViaStream(s, dir)
         .orderBy(col("creation_date"), col("restaurant_id"), col("item_category"))),

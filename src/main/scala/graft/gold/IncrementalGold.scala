@@ -8,24 +8,27 @@ import org.apache.spark.sql.functions._
   * each run, `scripts/cdc_metrics_job_gold.py` — fine at demo scale,
   * a full 100 TB re-scan per run at ours).
   *
-  * Two maintenance strategies, by mart algebra:
+  * Two maintenance algebras, both recomputing the touched keys from
+  * silver, so applying the same delta twice gives the same mart (a
+  * rerun after a crash is the recovery):
   *
-  *  - **Key-scoped recompute** ([[IncrementalLtv]]): LTV's running
-  *    cumulative sum is NOT delta-additive — one changed day invalidates
-  *    the user's whole forward series — but it is key-local: only
-  *    touched users need recomputing. Cost scales with the delta's user
-  *    set, not the corpus: a `left_semi` join prunes silver to affected
-  *    users (partition-pruning to affected dates applies on top when
-  *    silver is date-partitioned), a `left_anti` keeps every other
-  *    user's mart rows verbatim.
+  *  - **Key-scoped recompute** ([[IncrementalKeyScoped]]): a mart whose
+  *    rows for a key depend only on that key's source rows. LTV's
+  *    running cumulative sum is NOT delta-additive — one changed day
+  *    invalidates the user's whole forward series — but it is local to
+  *    `user_id`; daily trends are local to `creation_date`. Cost scales
+  *    with the delta's key set, not the corpus: a `left_semi` join
+  *    prunes silver to affected keys (partition pruning applies on top
+  *    when silver is partitioned by the key), a `left_anti` keeps every
+  *    other key's mart rows verbatim. Exact for any change action.
   *
-  *  - **Additive merge** ([[IncrementalRollup]]): plain grouped sums
-  *    (sales trends, daily revenue) are delta-additive for append-only
-  *    deltas (the watermarked-fact CDC path, AppendOnlyCdc): aggregate
-  *    ONLY the fresh rows and merge-add into the prior mart by group
-  *    key. Money stays exact: each side's dollars are integral 1e-4
-  *    cents / 1e4, so `round(x·10⁴)` recovers the exact integer cents
-  *    before the re-sum ([[Money]] invariant).
+  *  - **Anchored** ([[IncrementalAnchored]]): RFM and churn score
+  *    recency against a data-derived global anchor; key-scoped while the
+  *    anchor holds, full rebuild when the delta moves it.
+  *
+  * [[GoldMarts]] maps each maintained mart to its full build and its
+  * maintainer; the pipeline refresh, the withheld-day replay and the
+  * streamed replay all read it.
   */
 object IncrementalKeyScoped {
 
@@ -34,7 +37,8 @@ object IncrementalKeyScoped {
     * the touched keys (left_semi).
     *
     * Valid iff `build` is KEY-LOCAL: a key's output rows depend only on
-    * that key's source rows. [[Ltv.daily]] qualifies unconditionally.
+    * that key's source rows. [[Ltv.daily]] (per user) and
+    * [[SalesTrends.daily]] (per day) qualify unconditionally.
     * Marts with a data-derived GLOBAL anchor ([[Rfm]]/[[Churn]]'s
     * `today = max(creation_date)`) are key-local only while the anchor
     * is unchanged by the delta — if the delta advances the max date,
@@ -149,25 +153,28 @@ private[gold] object IncrementalAnchored {
   }
 }
 
-/** Additive maintenance for the trend rollups: aggregate ONLY the fresh
-  * append-only rows and merge-add into the prior mart by group key —
-  * the run cost scales with the delta, never the history. */
+/** Daily trends maintained key-scoped on `creation_date`: a day's rows
+  * depend only on that day's revenue rows, so the delta's days are
+  * rebuilt from silver and every other day is kept verbatim. */
 object IncrementalTrends {
-  def daily(prevMart: DataFrame, freshRevenue: DataFrame): DataFrame =
-    IncrementalRollup.addDelta(prevMart, SalesTrends.daily(freshRevenue),
-      Seq("creation_date", "restaurant_id", "item_category"), "daily_revenue")
+  def daily(prevMart: DataFrame, revenue: DataFrame, delta: DataFrame): DataFrame =
+    IncrementalKeyScoped(prevMart, revenue, delta, "creation_date")(SalesTrends.daily)
 }
 
-object IncrementalRollup {
+/** One maintained gold mart: its path under the gold zone, its full
+  * build over conformed revenue, and its maintainer
+  * `(prevMart, revenue, delta) => next mart`. */
+final case class MaintainedMart(
+    name: String,
+    build: DataFrame => DataFrame,
+    maintain: (DataFrame, DataFrame, DataFrame) => DataFrame)
 
-  /** Merge an append-only delta into a grouped money-sum mart: both
-    * sides aggregated by `keys`, cents re-derived exactly, added, and
-    * returned in dollars. `valueCol` must be a [[Money.sumMoney]]-style
-    * dollar column in BOTH frames. */
-  def addDelta(
-      prevMart: DataFrame, deltaMart: DataFrame,
-      keys: Seq[String], valueCol: String): DataFrame =
-    prevMart.unionByName(deltaMart)
-      .groupBy(keys.map(col): _*)
-      .agg((sum(round(col(valueCol) * 10000)) / 10000.0).as(valueCol))
+/** The maintained gold marts, written once. */
+object GoldMarts {
+  val ltvDaily = MaintainedMart("fact_ltv_daily", Ltv.daily, IncrementalLtv(_, _, _))
+  val rfm = MaintainedMart("mart_customer_rfm", Rfm(_), IncrementalRfm(_, _, _))
+  val churn = MaintainedMart("mart_customer_churn_profile", Churn(_), IncrementalChurn(_, _, _))
+  val trendsDaily =
+    MaintainedMart("mart_sales_trends/daily", SalesTrends.daily, IncrementalTrends.daily)
+  val all: Seq[MaintainedMart] = Seq(ltvDaily, rfm, churn, trendsDaily)
 }

@@ -25,35 +25,17 @@ object IncrementalReplay {
     * 2001-08-01) and populated at every SF. */
   val replayDate = "1995-06-15"
 
-  private def split(revenue: DataFrame): (DataFrame, DataFrame) = {
+  /** `mart` maintained over the withheld day — must equal
+    * `mart.build(revenue)`. */
+  def apply(mart: MaintainedMart, revenue: DataFrame): DataFrame = {
     val d = to_date(lit(replayDate))
-    (revenue.filter(col("creation_date") =!= d),
+    mart.maintain(
+      mart.build(revenue.filter(col("creation_date") =!= d)), revenue,
       revenue.filter(col("creation_date") === d))
   }
 
-  /** Maintained `fact_ltv_daily` — must equal `Ltv.daily(revenue)`. */
-  def ltvDaily(revenue: DataFrame): DataFrame = {
-    val (base, delta) = split(revenue)
-    IncrementalLtv(Ltv.daily(base), revenue, delta)
-  }
-
-  /** Maintained RFM mart — must equal `Rfm(revenue)`. */
-  def rfm(revenue: DataFrame): DataFrame = {
-    val (base, delta) = split(revenue)
-    IncrementalRfm(Rfm(base), revenue, delta)
-  }
-
-  /** Maintained churn mart — must equal `Churn(revenue)`. */
-  def churn(revenue: DataFrame): DataFrame = {
-    val (base, delta) = split(revenue)
-    IncrementalChurn(Churn(base), revenue, delta)
-  }
-
-  /** Additively maintained daily trends — must equal
-    * `SalesTrends.daily(revenue)` (the replayed day is append-only, the
-    * [[IncrementalRollup]] precondition). */
-  def trendsDaily(revenue: DataFrame): DataFrame = {
-    val (base, delta) = split(revenue)
-    IncrementalTrends.daily(SalesTrends.daily(base), delta)
-  }
+  def ltvDaily(revenue: DataFrame): DataFrame = apply(GoldMarts.ltvDaily, revenue)
+  def rfm(revenue: DataFrame): DataFrame = apply(GoldMarts.rfm, revenue)
+  def churn(revenue: DataFrame): DataFrame = apply(GoldMarts.churn, revenue)
+  def trendsDaily(revenue: DataFrame): DataFrame = apply(GoldMarts.trendsDaily, revenue)
 }

@@ -56,21 +56,6 @@ object ParquetSink {
   /** Unpartitioned mart write (S7). */
   def flat(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).option("compression", "snappy").parquet(path)
-
-  /** Bucketed external table (the 100 TB silver layout): both fact
-    * sides of a co-keyed join written with the same bucket count+columns
-    * make the join SHUFFLE-FREE (bucket-pruned sort-merge; see
-    * `PlanSpec`). Bucketing needs catalog metadata, so this registers an
-    * external table at `path` rather than writing bare files. */
-  def bucketed(
-      df: DataFrame, path: String, tableName: String,
-      bucketCols: Seq[String], buckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .option("compression", "snappy")
-      .option("path", path)
-      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(tableName)
 }
 
 object ParquetSource {

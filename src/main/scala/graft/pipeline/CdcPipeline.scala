@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -76,6 +77,7 @@ final class CdcPipeline(
       .persist()
     try {
       ParquetSink.flat(current, lake.bronze(table, runDate))
+      settleSwap(lake.snapshot(table))
       val previous = ParquetSource.readOrEmpty(spark, lake.snapshot(table), current)
       val changes = SnapshotDiff(current, previous, pk, cdcTs)
       ParquetSink.partitioned(changes, lake.cdc(table, runDate), Seq("cdc_action"))
@@ -116,138 +118,69 @@ final class CdcPipeline(
     ParquetSink.partitioned(revenue, lake.silver("order_revenue"), Seq("creation_date"))
   }
 
-  /** Silver revenue over BUCKETED silver tables — the 100 TB layout
-    * (SURVEY §1.2 / BASELINE round-2 candidate): items and options are
-    * both fact-sized and co-keyed on the line key, so writing both
-    * bucketed by it makes [[RevenueConform]]'s join (and every
-    * order-grain pre-aggregation downstream) shuffle-free. Same rows as
-    * [[silverRevenue]] — only the physical plan differs (asserted in
-    * `CdcPipelineSpec`/`PlanSpec`). */
-  def silverRevenueBucketed(buckets: Int = 8): Unit = {
-    val keys = Seq("order_id", "lineitem_id")
-    ParquetSink.bucketed(
-      spark.read.parquet(lake.silver("order_items")),
-      lake.silver("order_items_bucketed"), "graft_order_items_bucketed",
-      keys, buckets)
-    ParquetSink.bucketed(
-      spark.read.parquet(lake.silver("order_item_options"))
-        .drop("creation_date", "cdc_action", "cdc_timestamp", "ingestion_timestamp"),
-      lake.silver("order_item_options_bucketed"), "graft_order_item_options_bucketed",
-      keys, buckets)
-    val revenue = RevenueConform(
-      spark.table("graft_order_items_bucketed"),
-      spark.table("graft_order_item_options_bucketed"), keys)
-    ParquetSink.partitioned(revenue, lake.silver("order_revenue"), Seq("creation_date"))
-  }
-
-  /** Incremental gold (the CDF-style delta path — SURVEY §4 "caching"
-    * row and BASELINE round-2 candidate): maintain `fact_ltv_daily`
-    * from the run's cdc change log instead of recomputing every user.
-    * First run (no prior mart) falls back to the full [[Ltv.daily]]
-    * build. The mart is rewritten via a temp-dir swap because the next
-    * mart is derived FROM the current one — overwriting a path still
-    * being lazily read would race the delete (at 100 TB, swap per
-    * affected `creation_date=` partition instead of the whole mart). */
-  def goldLtvIncremental(runDate: String): Unit = {
-    val revenue = spark.read.parquet(lake.silver("order_revenue"))
-    val martPath = lake.gold("fact_ltv_daily")
-    if (!martExists(martPath)) {
-      ParquetSink.partitioned(Ltv.daily(revenue), martPath, Seq("creation_date"))
-    } else {
-      val changes = spark.read.parquet(lake.cdc("order_items", runDate))
-      swapWrite(
-        IncrementalLtv(spark.read.parquet(martPath), revenue, changes),
-        martPath, Seq("creation_date"))
-    }
-  }
-
-  private def martExists(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Swap-rewrite a mart whose next version derives FROM its current
+  /** Swap-rewrite a path whose next version derives FROM its current
     * one: write to a temp dir, delete, rename — overwriting a path still
     * being lazily read would race the delete (at 100 TB, swap per
-    * affected partition instead of the whole mart). */
+    * affected partition instead of the whole mart). A crash between the
+    * delete and the rename is finished by [[settleSwap]]. */
   private def swapWrite(
-      df: DataFrame, martPath: String, partitionCols: Seq[String]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(martPath)
+      df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(martPath + "__tmp")
-    if (partitionCols.nonEmpty) ParquetSink.partitioned(df, tmp.toString, partitionCols)
-    else ParquetSink.flat(df, tmp.toString)
+    val tmp = new Path(path + "__tmp")
+    write(df, tmp.toString, partitionCols)
     fs.delete(p, true)
-    require(fs.rename(tmp, p), s"swap of $martPath failed")
+    require(fs.rename(tmp, p), s"swap of $path failed")
+  }
+
+  private def write(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
+    if (partitionCols.nonEmpty) ParquetSink.partitioned(df, path, partitionCols)
+    else ParquetSink.flat(df, path)
+
+  /** Finishes a [[swapWrite]] that died between its delete and its
+    * rename: a live copy that is absent next to a complete (`_SUCCESS`)
+    * `__tmp` copy means the temp copy is the new version, so it is
+    * renamed into place. Called before a swapped path is read or
+    * written. @return whether the live copy exists */
+  private def settleSwap(path: String): Boolean = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(path + "__tmp")
+    if (!fs.exists(p) && fs.exists(new Path(tmp, "_SUCCESS")))
+      require(fs.rename(tmp, p), s"recovery of $path failed")
+    fs.exists(p)
   }
 
   /** One incremental gold refresh from the run's cdc change log — each
-    * mart maintained by its algebra (SURVEY §4 caching note; the
-    * reference recomputes every mart from full silver every run):
+    * mart of [[GoldMarts]] maintained by its algebra (the reference
+    * recomputes every mart from full silver every run):
     *
-    *  - `fact_ltv_daily` — key-scoped ([[IncrementalLtv]]);
-    *  - `mart_customer_rfm` / `mart_customer_churn_profile` — guarded
-    *    key-scoped ([[IncrementalRfm]]/[[IncrementalChurn]]): full
-    *    rebuild iff the delta advances the recency anchor;
-    *  - `mart_sales_trends/daily` — additive merge when the change log
-    *    is INSERT-only (the watermarked append path): aggregate only the
-    *    conformed revenue of the appended line keys and merge-add;
-    *    any update/delete in the log forces the full recompute (sums
-    *    are not subtractable without the old images).
+    *  - `fact_ltv_daily` — key-scoped on `user_id` ([[IncrementalLtv]]);
+    *  - `mart_customer_rfm` / `mart_customer_churn_profile` — anchored
+    *    ([[IncrementalRfm]]/[[IncrementalChurn]]): key-scoped on
+    *    `user_id`, full rebuild iff the delta moves the recency anchor;
+    *  - `mart_sales_trends/daily` — key-scoped on `creation_date`
+    *    ([[IncrementalTrends]]).
     *
-    * The change log must carry `user_id`, `creation_date`, and the line
-    * key (`order_id`, `lineitem_id`); first run (no prior mart) builds
-    * everything full. */
+    * Every maintainer recomputes the touched keys from silver, so the
+    * refresh is idempotent for any change action and a rerun of the
+    * same run date is the recovery from a crash at any point; it keeps
+    * no state of its own. The change log must carry `user_id` and
+    * `creation_date`; a mart with no live copy is built full. Each mart
+    * is rewritten via [[swapWrite]] because its next version is derived
+    * FROM the current one. */
   def refreshGold(runDate: String): Unit = {
     val revenue = spark.read.parquet(lake.silver("order_revenue")).persist()
     try {
-      goldLtvIncremental(runDate)
       val changes = spark.read.parquet(lake.cdc("order_items", runDate))
-
-      val rfmPath = lake.gold("mart_customer_rfm")
-      if (!martExists(rfmPath)) ParquetSink.flat(Rfm(revenue), rfmPath)
-      else swapWrite(
-        IncrementalRfm(spark.read.parquet(rfmPath), revenue, changes), rfmPath, Nil)
-
-      val churnPath = lake.gold("mart_customer_churn_profile")
-      if (!martExists(churnPath)) ParquetSink.flat(Churn(revenue), churnPath)
-      else swapWrite(
-        IncrementalChurn(spark.read.parquet(churnPath), revenue, changes),
-        churnPath, Nil)
-
-      val dailyPath = lake.gold("mart_sales_trends/daily")
-      // null-SAFE: a NULL cdc_action is NOT an insert — `=!= "insert"`
-      // would drop NULL rows from the check and let them ride the
-      // additive path as phantom inserts
-      val insertOnly = changes.columns.contains("cdc_action") &&
-        changes.filter(!(col("cdc_action") <=> "insert")).isEmpty
-      // RERUN SAFETY: the key-scoped maintainers above are idempotent
-      // (they recompute affected keys from silver), but merge-ADD applied
-      // twice double-counts — so the additive path records a TWO-PHASE
-      // applied-marker per runDate: "pending" before the swap, "done"
-      // after. done → rerun is a no-op; pending → the swap may or may
-      // not have landed (crash between swap and marker), so the rerun
-      // falls back to the full recompute, which is correct from either
-      // state; absent → normal additive apply.
-      val applied = s"gold/mart_sales_trends_daily/applied/$runDate"
-      val marker = store.get(applied, "")
-      if (!martExists(dailyPath))
-        ParquetSink.flat(SalesTrends.daily(revenue), dailyPath)
-      else if (marker == "pending") {
-        swapWrite(SalesTrends.daily(revenue), dailyPath, Nil)
-        store.put(applied, "done")
-      } else if (insertOnly) {
-        if (marker != "done") {
-          val fresh = revenue.join(
-            changes.select(col("order_id"), col("lineitem_id")).distinct(),
-            Seq("order_id", "lineitem_id"), "left_semi")
-          store.put(applied, "pending")
-          swapWrite(
-            IncrementalTrends.daily(spark.read.parquet(dailyPath), fresh),
-            dailyPath, Nil)
-          store.put(applied, "done")
-        }
-      } else swapWrite(SalesTrends.daily(revenue), dailyPath, Nil)
+      GoldMarts.all.foreach { m =>
+        val path = lake.gold(m.name)
+        val partitionCols =
+          if (m == GoldMarts.ltvDaily) Seq("creation_date") else Nil
+        if (!settleSwap(path)) write(m.build(revenue), path, partitionCols)
+        else swapWrite(
+          m.maintain(spark.read.parquet(path), revenue, changes), path, partitionCols)
+      }
     } finally { revenue.unpersist() }
   }
 

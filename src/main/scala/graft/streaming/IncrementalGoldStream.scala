@@ -24,33 +24,41 @@ import org.apache.spark.sql.streaming.Trigger
   * of the same day (double-counting appends, stale-mart reads,
   * cross-batch key overlap) cannot match.
   *
-  * All three maintenance algebras ride the SAME harness:
-  *   - [[ltvViaStream]]: unconditional key-scoped recompute
+  * Both maintenance algebras ride the SAME harness, each mart's
+  * maintainer taken from [[graft.gold.GoldMarts]]:
+  *   - [[ltvViaStream]]: key-scoped recompute per user
   *     ([[graft.gold.IncrementalLtv]] — no global anchor);
-  *   - [[rfmViaStream]]: GUARDED key-scoped recompute
-  *     ([[graft.gold.IncrementalRfm]]) — the anchored guard re-evaluates
+  *   - [[rfmViaStream]]: ANCHORED recompute
+  *     ([[graft.gold.IncrementalRfm]]) — the anchor guard re-evaluates
   *     per micro-batch against the evolving mart, proving the
   *     hold-the-anchor branch composes across batch boundaries;
-  *   - [[trendsViaStream]]: additive merge
-  *     ([[graft.gold.IncrementalTrends]]) — per-batch partial aggregates
-  *     merge-add into the mart, exact because money rides integral
-  *     1e-4 cents on both sides, so batch slicing and arrival order
-  *     cannot perturb the sum.
+  *   - [[trendsViaStream]]: key-scoped recompute per day
+  *     ([[graft.gold.IncrementalTrends]]) — every batch touches the
+  *     replayed day, so each one rebuilds that day from the silver
+  *     landed so far and replaces the previous version's rows for it.
   *
   * `Trigger.AvailableNow` + `maxFilesPerTrigger=1` drains the sliced
   * input one file per micro-batch and stops — no sentinels or
   * watermarks needed because `foreachBatch` sees every batch exactly
   * once through the checkpoint. Batch order is irrelevant by design:
   * the landing sequence is order-insensitive (appends commute; the
-  * key-scoped maintainers recompute affected keys from silver, not from
-  * the batch payload; the additive maintainer's merge is commutative),
-  * which is itself a property worth proving — real CDC landings arrive
-  * in whatever order the bus delivers.
+  * maintainers recompute affected keys from silver, not from the batch
+  * payload), which is itself a property worth proving — real CDC
+  * landings arrive in whatever order the bus delivers.
   */
 object IncrementalGoldStream {
 
+  import graft.gold.{GoldMarts, MaintainedMart}
+
+  /** The marts one stream session maintains. */
+  private val maintained = Seq(GoldMarts.ltvDaily, GoldMarts.rfm, GoldMarts.trendsDaily)
+
+  private def finalMart(
+      spark: SparkSession, dir: String, slices: Int, mart: MaintainedMart): DataFrame =
+    spark.read.parquet(maintainedMarts(spark, dir, slices)(mart.name))
+
   def ltvViaStream(spark: SparkSession, dir: String, slices: Int = 3): DataFrame =
-    spark.read.parquet(maintainedMarts(spark, dir, slices).ltv)
+    finalMart(spark, dir, slices, GoldMarts.ltvDaily)
 
   /** RFM through the stream: the anchored guard
     * ([[graft.gold.IncrementalAnchored]]) runs once PER micro-batch —
@@ -58,14 +66,13 @@ object IncrementalGoldStream {
     * held-anchor key-scoped branch against the mart version its
     * predecessor wrote. Shares q05's full-recompute oracle. */
   def rfmViaStream(spark: SparkSession, dir: String, slices: Int = 3): DataFrame =
-    spark.read.parquet(maintainedMarts(spark, dir, slices).rfm)
+    finalMart(spark, dir, slices, GoldMarts.rfm)
 
-  /** Daily trends through the stream: the ADDITIVE path — each batch's
-    * partial aggregate merge-adds into the prior mart version; silver
-    * still lands (the ingest write) but maintenance never re-reads it.
-    * Shares q07's full-recompute oracle. */
+  /** Daily trends through the stream: every batch rebuilds the replayed
+    * day from the silver landed so far, so the last batch's version
+    * holds the whole day. Shares q07's full-recompute oracle. */
   def trendsViaStream(spark: SparkSession, dir: String, slices: Int = 3): DataFrame =
-    spark.read.parquet(maintainedMarts(spark, dir, slices).trends)
+    finalMart(spark, dir, slices, GoldMarts.trendsDaily)
 
   /** The shared replay harness: withhold the replay day from silver,
     * build mart v0 from the base, stream the day's rows back user-hash-
@@ -103,16 +110,14 @@ object IncrementalGoldStream {
       (basePath, inDir)
     })
 
-  /** Final mart paths for the three maintainers after the drain. */
-  final case class Marts(ltv: String, rfm: String, trends: String)
-
+  /** Final mart path by mart name, after the drain. */
   private val martsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), Marts]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), Map[String, String]]
 
   /** ONE stream session maintains all three marts: the replay day
     * drains once (one checkpoint, one set of micro-batch triggers), and
     * each `foreachBatch` lands the batch then runs the three
-    * maintenance algebras side by side — each against ITS OWN previous
+    * maintainers side by side — each against ITS OWN previous
     * mart version, exactly as a production landing job maintains every
     * downstream mart off one ingest. The per-maintainer gate is
     * unchanged (same slices, same per-batch maintenance chain, same
@@ -121,7 +126,7 @@ object IncrementalGoldStream {
     * checkpoint floor three times (~13 s combined for ~4 s of
     * maintenance work). */
   private def maintainedMarts(
-      spark: SparkSession, dir: String, slices: Int): Marts =
+      spark: SparkSession, dir: String, slices: Int): Map[String, String] =
     martsCache.getOrElseUpdate((spark, dir, slices), {
       val (basePath, inDir) = preparedInputs(spark, dir, slices)
       val delta = spark.read.parquet(inDir)
@@ -131,17 +136,11 @@ object IncrementalGoldStream {
       // ingest write lands ONLY in the per-run zone, so runs stay
       // isolated without copying the 600k-row base per query
       val appendPath = s"$root/silver_append"
-      val maintainers: Seq[(String, DataFrame => DataFrame,
-          (DataFrame, DataFrame, DataFrame) => DataFrame)] = Seq(
-        ("ltv", graft.gold.Ltv.daily,
-          (prev, silver, batch) => graft.gold.IncrementalLtv(prev, silver, batch)),
-        ("rfm", df => graft.gold.Rfm(df),
-          (prev, silver, batch) => graft.gold.IncrementalRfm(prev, silver, batch)),
-        ("trends", graft.gold.SalesTrends.daily,
-          (prev, _, batch) => graft.gold.IncrementalTrends.daily(prev, batch)))
+      def versionPath(m: MaintainedMart, v: Int) =
+        s"$root/${m.name.replace('/', '_')}_v$v"
       val base = spark.read.parquet(basePath)
-      maintainers.foreach { case (tag, buildMart, _) =>
-        buildMart(base).write.mode("overwrite").parquet(s"$root/${tag}_v0")
+      maintained.foreach { m =>
+        m.build(base).write.mode("overwrite").parquet(versionPath(m, 0))
       }
 
       // driver-side mart-version cursor; foreachBatch bodies run on the
@@ -158,10 +157,9 @@ object IncrementalGoldStream {
           val b = batch.toDF().persist()
           b.write.mode("append").parquet(appendPath)
           val silver = s.read.parquet(basePath, appendPath)
-          maintainers.foreach { case (tag, _, maintain) =>
-            val prev = s.read.parquet(s"$root/${tag}_v$version")
-            maintain(prev, silver, b)
-              .write.mode("overwrite").parquet(s"$root/${tag}_v${version + 1}")
+          maintained.foreach { m =>
+            m.maintain(s.read.parquet(versionPath(m, version)), silver, b)
+              .write.mode("overwrite").parquet(versionPath(m, version + 1))
           }
           version += 1
           b.unpersist()
@@ -169,7 +167,6 @@ object IncrementalGoldStream {
         }
         .start()
       q.awaitTermination()
-      Marts(s"$root/ltv_v$version", s"$root/rfm_v$version",
-        s"$root/trends_v$version")
+      maintained.map(m => m.name -> versionPath(m, version)).toMap
     })
 }

@@ -77,30 +77,6 @@ class CdcPipelineSpec extends SparkSpec {
     assert(revenue.count() > 0)
     assert(revenue.columns.contains("total_revenue"))
 
-    // bucketed silver layout: identical rows, shuffle-free revenue join
-    val plainRevenue = revenue
-      .select(col("order_id"), col("lineitem_id"), col("option_name"),
-        col("total_revenue"))
-      .collect().map(_.toSeq).toSet
-    pipe.silverRevenueBucketed(buckets = 4)
-    val bucketedRevenue = spark.read.parquet(lake.silver("order_revenue"))
-      .select(col("order_id"), col("lineitem_id"), col("option_name"),
-        col("total_revenue"))
-      .collect().map(_.toSeq).toSet
-    assert(bucketedRevenue == plainRevenue)
-    val oldThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = graft.silver.RevenueConform(
-        spark.table("graft_order_items_bucketed"),
-        spark.table("graft_order_item_options_bucketed"),
-        Seq("order_id", "lineitem_id"))
-      val txt = joined.asInstanceOf[org.apache.spark.sql.classic.Dataset[
-        org.apache.spark.sql.Row]].queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      assert(txt.contains("SortMergeJoin") && !txt.contains("Exchange"),
-        s"bucketed revenue join should be shuffle-free:\n$txt")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThreshold)
     // silver is date-partitioned on disk (partition pruning surface)
     assert(new java.io.File(s"$root/silver/order_revenue")
       .listFiles().exists(_.getName.startsWith("creation_date=")))
@@ -142,8 +118,8 @@ class CdcPipelineSpec extends SparkSpec {
       !cdcDir.listFiles().exists(_.getName.startsWith("cdc_action=")))
 
     // incremental gold second run: some users' revenue changes land in
-    // silver + the cdc log; the delta-maintained mart must equal a full
-    // recompute over the new silver
+    // silver + the cdc log; the delta-maintained LTV mart must equal a
+    // full recompute over the new silver
     val updatedRows = spark.read.parquet(lake.silver("order_revenue"))
       .withColumn("total_revenue",
         when(col("user_id") % 5 === 0, col("total_revenue") * 2)
@@ -154,9 +130,10 @@ class CdcPipelineSpec extends SparkSpec {
       spark.sparkContext.parallelize(updatedRows), silverSchema)
     graft.io.ParquetSink.partitioned(
       updated, lake.silver("order_revenue"), Seq("creation_date"))
-    updated.filter(col("user_id") % 5 === 0).select("user_id").distinct()
+    updated.filter(col("user_id") % 5 === 0)
+      .select("order_id", "lineitem_id", "user_id", "creation_date")
       .write.parquet(lake.cdc("order_items", "2024-06-03"))
-    pipe.goldLtvIncremental("2024-06-03")
+    pipe.refreshGold("2024-06-03")
     val martRows = spark.read.parquet(lake.gold("fact_ltv_daily"))
       .select(col("user_id"), col("creation_date").cast("string"),
         col("daily_revenue"), col("cumulative_ltv"))
@@ -170,8 +147,7 @@ class CdcPipelineSpec extends SparkSpec {
       "incrementally maintained fact_ltv_daily diverged from full recompute")
 
     // composed refreshGold over an UPDATE delta: ltv/rfm/churn take the
-    // key-scoped path, daily trends falls back to the full recompute
-    // (sums are not subtractable without old images)
+    // key-scoped path on user_id, daily trends on creation_date
     val newSilver = spark.read.parquet(lake.silver("order_revenue"))
     newSilver.filter(col("user_id") % 5 === 0)
       .select("order_id", "lineitem_id", "user_id", "creation_date")
@@ -194,8 +170,9 @@ class CdcPipelineSpec extends SparkSpec {
       dateStr(graft.gold.SalesTrends.daily(newSilver)),
       "refreshGold daily trends diverged from full recompute")
 
-    // additive path: prior daily mart = history minus the newest day,
-    // change log = that day's line keys tagged insert -> merge-add
+    // insert delta: prior daily mart = history minus the newest day,
+    // change log = that day's line keys tagged insert -> the day is
+    // rebuilt from silver
     val maxDate = newSilver.agg(max(col("creation_date"))).head.getDate(0)
     graft.io.ParquetSink.flat(
       graft.gold.SalesTrends.daily(
@@ -208,33 +185,29 @@ class CdcPipelineSpec extends SparkSpec {
     pipe.refreshGold("2024-06-05")
     assert(dateStr(spark.read.parquet(lake.gold("mart_sales_trends/daily"))) ==
       dateStr(graft.gold.SalesTrends.daily(newSilver)),
-      "additive trends merge diverged from full recompute")
+      "key-scoped trends over an insert delta diverged from full recompute")
 
     // rerun safety: replaying the SAME insert-only run must not
-    // double-add (applied-marker short-circuit), and the key-scoped
-    // maintainers are idempotent by construction
+    // double-count — every maintainer recomputes the touched keys from
+    // silver, so it is idempotent by construction
     pipe.refreshGold("2024-06-05")
     assert(dateStr(spark.read.parquet(lake.gold("mart_sales_trends/daily"))) ==
       dateStr(graft.gold.SalesTrends.daily(newSilver)),
-      "rerunning the additive refresh double-counted the delta")
+      "rerunning the trends refresh double-counted the delta")
     assert(martSet(lake.gold("mart_customer_rfm")) ==
       graft.gold.Rfm(newSilver).collect().map(_.toSeq).toSet,
       "rerunning the key-scoped refresh changed the rfm mart")
 
-    // crash ambiguity: a "pending" marker means the swap may or may not
-    // have landed — the rerun must fall back to the full recompute (and
-    // settle the marker), never merge-add again from either state
+    // a control-store marker left by an older additive refresh is
+    // ignored: the rerun still converges to the full recompute
     pipe.store.put("gold/mart_sales_trends_daily/applied/2024-06-05", "pending")
     pipe.refreshGold("2024-06-05")
     assert(dateStr(spark.read.parquet(lake.gold("mart_sales_trends/daily"))) ==
       dateStr(graft.gold.SalesTrends.daily(newSilver)),
       "pending-marker rerun did not settle to the full recompute")
-    assert(pipe.store.get(
-      "gold/mart_sales_trends_daily/applied/2024-06-05", "") == "done")
 
-    // a NULL cdc_action is NOT an insert: a change log of already-counted
-    // line keys with NULL actions must take the full-recompute path —
-    // the additive path would double-add their revenue
+    // a NULL cdc_action: a change log of already-counted line keys must
+    // not add their revenue again — the touched days are rebuilt
     newSilver.filter(col("user_id") % 7 === 0)
       .select("order_id", "lineitem_id", "user_id", "creation_date")
       .withColumn("cdc_action", lit(null).cast("string"))
@@ -242,6 +215,75 @@ class CdcPipelineSpec extends SparkSpec {
     pipe.refreshGold("2024-06-06")
     assert(dateStr(spark.read.parquet(lake.gold("mart_sales_trends/daily"))) ==
       dateStr(graft.gold.SalesTrends.daily(newSilver)),
-      "NULL cdc_action rode the additive path and double-counted")
+      "NULL cdc_action double-counted the touched days")
+  }
+
+  /** One run date of the pipeline up to the revenue build, as the job
+    * orders its stages. */
+  private def ingest(
+      pipe: CdcPipeline, lake: Lakehouse, items: org.apache.spark.sql.DataFrame,
+      runDate: String, now: String): Unit = {
+    pipe.bronzeFact(items, "order_items", "creation_ts", runDate, ts, now)
+    pipe.bronzeSnapshot(optionsSource, "order_item_options",
+      Seq("order_id", "lineitem_id", "option_name"), runDate, ts)
+    pipe.silverConform(
+      "order_items", lake.bronze("order_items", runDate), "creation_ts",
+      Map("item_price" -> "double"), Seq("order_id", "lineitem_id"),
+      Seq(col("item_price")))
+    pipe.silverConform(
+      "order_item_options", lake.bronze("order_item_options", runDate),
+      "cdc_timestamp", Map("option_price" -> "double"),
+      Seq("order_id", "lineitem_id"), Seq(col("option_name"), col("option_price")))
+    pipe.silverRevenue()
+  }
+
+  test("refreshGold counts rows stamped at the previous run clock once") {
+    // bronze's inclusive >= watermark re-reads the rows stamped exactly
+    // at the previous run clock; they are already in silver, so the
+    // second run's change log repeats them
+    val boundary = "1996-01-03 00:00:00"
+    val items = Conformed.items(spark, sf)
+    val t = lit(boundary).cast("timestamp")
+    assert(items.filter(col("creation_ts") === t).count() > 0,
+      s"fixture must hold rows stamped $boundary")
+    val root = Files.createTempDirectory("graft-lake-boundary").toString
+    val lake = Lakehouse(s"file://$root")
+    val pipe = new CdcPipeline(spark, lake)
+
+    ingest(pipe, lake, items.filter(col("creation_ts") <= t), "run-1", boundary)
+    pipe.refreshGold("run-1")
+    val nextDay = "1996-01-04 00:00:00"
+    ingest(pipe, lake, items.filter(col("creation_ts") < lit(nextDay).cast("timestamp")),
+      "run-2", nextDay)
+    assert(spark.read.parquet(lake.cdc("order_items", "run-2"))
+      .filter(col("creation_ts") === t).count() > 0, "run 2 must re-read the boundary rows")
+    pipe.refreshGold("run-2")
+
+    val cols = Seq(col("creation_date").cast("string"), col("restaurant_id"),
+      col("item_category"), col("daily_revenue"))
+    val silver = spark.read.parquet(lake.silver("order_revenue"))
+    assert(spark.read.parquet(lake.gold("mart_sales_trends/daily")).select(cols: _*)
+        .collect().map(_.toSeq).toSet ==
+      graft.gold.SalesTrends.daily(silver).select(cols: _*).collect().map(_.toSeq).toSet,
+      "refreshed daily trends diverged from the full build over silver")
+    // the refresh keeps no state of its own in the control store
+    assert(!new java.io.File(s"$root/control/gold").exists())
+  }
+
+  test("a snapshot swap that died between delete and rename is finished on rerun") {
+    val root = Files.createTempDirectory("graft-lake-swap").toString
+    val lake = Lakehouse(s"file://$root")
+    val pipe = new CdcPipeline(spark, lake)
+    val pk = Seq("order_id", "lineitem_id", "option_name")
+    pipe.bronzeSnapshot(optionsSource, "order_item_options", pk, "2024-06-01", ts)
+    // the crash: the live snapshot is deleted, the complete temp copy
+    // not yet renamed into place
+    val live = new java.io.File(s"$root/snapshots/order_item_options/latest")
+    assert(live.renameTo(new java.io.File(live.getPath + "__tmp")))
+    pipe.bronzeSnapshot(optionsSource, "order_item_options", pk, "2024-06-02", ts)
+    assert(live.exists())
+    assert(!new java.io.File(
+        s"$root/cdc/order_item_options/date=2024-06-02/cdc_action=insert").exists(),
+      "the rerun diffed against a lost snapshot and emitted every row as an insert")
   }
 }

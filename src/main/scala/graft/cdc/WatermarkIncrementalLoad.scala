@@ -40,8 +40,9 @@ object WatermarkIncrementalLoad {
 
   /** Full cycle: filter since watermark, process, write via `sink`,
     * advance the stored watermark to max(processed). Returns the new
-    * watermark, or None when there was nothing to process (watermark
-    * untouched — reference `cdc_metrics_job_silver.py:61-63`). */
+    * watermark, or None when there was nothing to process (nothing
+    * sunk, watermark untouched — reference
+    * `cdc_metrics_job_silver.py:61-63`). */
   def run(
       store: ControlStore,
       key: String,
@@ -51,22 +52,22 @@ object WatermarkIncrementalLoad {
       process: DataFrame => DataFrame)(
       sink: DataFrame => Unit): Option[String] = {
     val lastRun = store.get(key, defaultWatermark)
-    val fresh = sinceExclusive(input, watermarkCol, lastRun)
-    if (fresh.isEmpty) None
-    else {
-      // persist: the processed lineage is consumed twice (sink + max
-      // aggregate) and `process` typically contains the expensive
-      // cast/dedup work — without this the silver job runs its
-      // dominant cost twice (the reference recomputes, SURVEY §3.2)
-      val processed = process(fresh)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+    // persist: the processed lineage is consumed twice (max aggregate +
+    // sink) and `process` typically contains the expensive cast/dedup
+    // work — without this the silver job runs its dominant cost twice
+    // (the reference recomputes, SURVEY §3.2). The max aggregate runs
+    // first: it materializes the cache and doubles as the emptiness
+    // probe, so a drained input costs one job, not a separate probe.
+    val processed = process(sinceExclusive(input, watermarkCol, lastRun))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val wm = maxWatermark(processed, watermarkCol)
+      wm.foreach { w =>
         sink(processed)
-        val wm = maxWatermark(processed, watermarkCol)
-        wm.foreach(store.put(key, _))
-        wm
-      } finally { processed.unpersist() }
-    }
+        store.put(key, w)
+      }
+      wm
+    } finally { processed.unpersist() }
   }
 }
 

@@ -122,7 +122,10 @@ private[gold] object IncrementalAnchored {
     // three single-row aggregates computes them in one job with the
     // scans proceeding in parallel; the decision logic (and therefore
     // what the maintainer computes) is unchanged.
-    val anchors = prev
+    // A failed probe frees `prev` itself: left registered, the cache
+    // entry would keep the failed read's file listing, and a retry in
+    // the same session would match it and re-read that stale listing.
+    val anchors = try prev
       .agg(max(col(prevAnchorCol)).cast("date").as("m"))
       .select(lit("prev").as("w"), col("m"))
       .unionByName(delta.agg(max(col("creation_date")).cast("date").as("m"))
@@ -132,10 +135,16 @@ private[gold] object IncrementalAnchored {
       .collect()
       .map(r => r.getString(0) ->
         (if (r.isNullAt(1)) None else Some(r.getDate(1)))).toMap
+    catch { case e: Throwable => prev.unpersist(); throw e }
     val (prevAnchor, deltaMax, curMax) =
       (anchors("prev"), anchors("delta"), anchors("cur"))
     // registered AFTER the collect above (which is itself an action) so
-    // the one-shot listener fires on the maintained output's action
+    // the one-shot listener fires on the maintained output's action.
+    // When sibling marts are maintained concurrently (refreshGold, the
+    // streamed replay), a sibling's action can fire it first: `prev` is
+    // then freed early and the output re-reads the still-live mart —
+    // correct, only not cached. A listener keyed to the consuming
+    // execution would fix that (ROADMAP direction 3).
     graft.core.CacheLifecycle.unpersistAfterNextAction(prev)
     if (deltaMax.isEmpty) prev // empty delta: nothing to maintain
     else {

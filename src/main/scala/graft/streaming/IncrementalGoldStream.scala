@@ -117,7 +117,7 @@ object IncrementalGoldStream {
   /** ONE stream session maintains all three marts: the replay day
     * drains once (one checkpoint, one set of micro-batch triggers), and
     * each `foreachBatch` lands the batch then runs the three
-    * maintainers side by side — each against ITS OWN previous
+    * maintainers concurrently — each against ITS OWN previous
     * mart version, exactly as a production landing job maintains every
     * downstream mart off one ingest. The per-maintainer gate is
     * unchanged (same slices, same per-batch maintenance chain, same
@@ -157,10 +157,11 @@ object IncrementalGoldStream {
           val b = batch.toDF().persist()
           b.write.mode("append").parquet(appendPath)
           val silver = s.read.parquet(basePath, appendPath)
-          maintained.foreach { m =>
-            m.maintain(s.read.parquet(versionPath(m, version)), silver, b)
-              .write.mode("overwrite").parquet(versionPath(m, version + 1))
-          }
+          val v = version
+          graft.core.Concurrent.all(maintained.map { m => () =>
+            m.maintain(s.read.parquet(versionPath(m, v)), silver, b)
+              .write.mode("overwrite").parquet(versionPath(m, v + 1))
+          }: _*)
           version += 1
           b.unpersist()
           ()

@@ -270,6 +270,45 @@ class CdcPipelineSpec extends SparkSpec {
     assert(!new java.io.File(s"$root/control/gold").exists())
   }
 
+  test("a mart that fails to refresh leaves its siblings refreshed; the rerun converges") {
+    val items = Conformed.items(spark, sf)
+    val root = Files.createTempDirectory("graft-lake-fault").toString
+    val lake = Lakehouse(s"file://$root")
+    val pipe = new CdcPipeline(spark, lake)
+    val day2 = "1996-01-03 00:00:00"
+    val day3 = "1996-01-04 00:00:00"
+    ingest(pipe, lake, items.filter(col("creation_ts") < lit(day2).cast("timestamp")),
+      "run-1", day2)
+    pipe.refreshGold("run-1")
+    ingest(pipe, lake, items.filter(col("creation_ts") < lit(day3).cast("timestamp")),
+      "run-2", day3)
+
+    // every column as a string: partition columns come back last and
+    // typed by discovery, the full builds type them as dates
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.sorted.map(c => col(c).cast("string")): _*)
+        .collect().map(_.toSeq).toSet
+    val silver = spark.read.parquet(lake.silver("order_revenue"))
+    def matchesFullBuild(m: graft.gold.MaintainedMart) =
+      rows(spark.read.parquet(lake.gold(m.name))) == rows(m.build(silver))
+    val siblings = graft.gold.GoldMarts.all.filterNot(_ == graft.gold.GoldMarts.rfm)
+    assert(siblings.forall(m => !matchesFullBuild(m)), "run 2 must change every mart")
+
+    // an unreadable part file in the rfm mart fails its refresh
+    val bad = java.nio.file.Paths.get(s"$root/gold/mart_customer_rfm/part-99999-bad.parquet")
+    Files.write(bad, "not parquet".getBytes("UTF-8"))
+    intercept[Exception](pipe.refreshGold("run-2"))
+    siblings.foreach { m =>
+      assert(matchesFullBuild(m), s"${m.name} was not refreshed next to the failing rfm mart")
+    }
+
+    Files.delete(bad)
+    pipe.refreshGold("run-2")
+    graft.gold.GoldMarts.all.foreach { m =>
+      assert(matchesFullBuild(m), s"${m.name} diverged from its full build after the rerun")
+    }
+  }
+
   test("a snapshot swap that died between delete and rename is finished on rerun") {
     val root = Files.createTempDirectory("graft-lake-swap").toString
     val lake = Lakehouse(s"file://$root")

@@ -100,7 +100,7 @@ object Conformed {
       Seq("order_id", "lineitem_id"))
 
   // lifecycle-bounded (r14): evicts on session stop — see [[SessionCache]]
-  private val revCache = new SessionCache[String]
+  private val revCache = new SessionCache[String, DataFrame]
 
   /** [[orderRevenue]], materialized once per (session, dir) — the shape
     * the reference actually runs: gold reads silver as a MATERIALIZED
@@ -128,7 +128,7 @@ object Conformed {
         col("order_id"), col("lineitem_id")))
   }
 
-  private val tradeCache = new SessionCache[String]
+  private val tradeCache = new SessionCache[String, DataFrame]
 
   /** [[graft.gold.Geography.tradeSpine]] over the bound tables,
     * materialized once per (session, dir) — q241 and q242 aggregate the

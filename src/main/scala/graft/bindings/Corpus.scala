@@ -23,7 +23,7 @@ import graft.ext.Retrieval
 object Corpus {
   // lifecycle-bounded (r14, advisor r13 #5): entries evict on session
   // stop and on access after a context dies — see [[SessionCache]]
-  private val cache = new SessionCache[(String, String)]
+  private val cache = new SessionCache[(String, String), DataFrame]
 
   /** Build-once-per-session persist with EAGER materialization: the
     * count() inside the build (re-run on a FRESH rebuild after a

@@ -3,8 +3,11 @@ package graft.bindings
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped frame cache with a BOUNDED lifecycle — the shared
-  * store behind [[Corpus]] and [[Conformed]]'s build-once spines.
+/** Session-scoped cache with a BOUNDED lifecycle — the shared store
+  * behind [[Corpus]] and [[Conformed]]'s build-once spines, and behind
+  * the per-session values of the streaming replay inputs and the PCA
+  * model. `V` is the cached value; only frame caches (`V = DataFrame`)
+  * get the clearCache recovery of [[getOrRebuild]].
   *
   * The r13 shape (a bare TrieMap keyed by `SparkSession`) never
   * evicted: fine for a one-session harness, but a long-lived JVM that
@@ -28,9 +31,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Eviction only drops map entries; persisted blocks are unpersisted
   * by the context teardown itself (stop clears the block manager). */
-private[graft] final class SessionCache[K] {
+private[graft] final class SessionCache[K, V] {
   private val map =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, K), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, K), V]
   // per-key monitors for getOrRebuild: rebuilds persist (and eagerly
   // materialize) frames, so a lost race doesn't just waste work — the
   // loser's persisted blocks would sit untracked in the block manager
@@ -54,8 +57,7 @@ private[graft] final class SessionCache[K] {
     }
   }
 
-  def getOrElseUpdate(spark: SparkSession, key: K)
-      (build: => DataFrame): DataFrame = {
+  def getOrElseUpdate(spark: SparkSession, key: K)(build: => V): V = {
     purgeWhere(_.sparkContext.isStopped)
     hookContext(spark)
     map.getOrElseUpdate((spark, key), build)
@@ -65,8 +67,8 @@ private[graft] final class SessionCache[K] {
   def invalidate(spark: SparkSession): Int = purgeWhere(_ eq spark)
 
   /** Replace an entry (the rebuild-after-clearCache path). */
-  def put(spark: SparkSession, key: K, df: DataFrame): Unit =
-    map.put((spark, key), df)
+  def put(spark: SparkSession, key: K, value: V): Unit =
+    map.put((spark, key), value)
 
   /** The clearCache recovery rule in ONE place (r14, the q141 stall
     * root cause): if the cached frame has been unpersisted by a
@@ -88,20 +90,20 @@ private[graft] final class SessionCache[K] {
     * (a spine whose `fresh` pulls another cached spine) take their
     * monitors in builder-DAG order, so no cycle — and therefore no
     * deadlock — is possible. */
-  def getOrRebuild(spark: SparkSession, key: K)
-      (fresh: => DataFrame): DataFrame = {
+  def getOrRebuild(spark: SparkSession, key: K)(fresh: => DataFrame)
+      (implicit frame: DataFrame =:= V): DataFrame = {
     purgeWhere(_.sparkContext.isStopped)
     hookContext(spark)
     val k = (spark, key)
     val lock = locks.computeIfAbsent(k, _ => new Object)
     lock.synchronized {
-      map.get(k) match {
+      map.get(k).map(frame.flip) match {
         case Some(df)
             if df.storageLevel != org.apache.spark.storage.StorageLevel.NONE =>
           df
         case _ =>
           val d = fresh
-          map.put(k, d)
+          map.put(k, frame(d))
           d
       }
     }

@@ -39,14 +39,18 @@ object CacheLifecycle {
     * truncated — so the caller must pass the superseded iteration
     * frame itself, only after the replacing iteration has eagerly
     * materialized, and never a frame any live consumer still reads
-    * through. A non-checkpoint plan is refused (no-op), which also
-    * protects the first iteration of loops whose seed frame is a lazy
-    * view over a checkpoint that later rounds still need. */
+    * through. A non-checkpoint plan is refused: nothing is freed, and
+    * one WARN line names its plan-root class. A caller that frees a
+    * checkpoint some live frame still reads gets no error here; that
+    * frame's next action fails with "checkpoint block not found". */
   def freeSupersededCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false)
-      case _ => ()
+      case root =>
+        org.slf4j.LoggerFactory.getLogger("graft.core.CacheLifecycle").warn(
+          "freeSupersededCheckpoint refused a frame whose plan root is " +
+            s"${root.getClass.getSimpleName}, not a bare checkpoint; nothing freed")
     }
 
   def unpersistAfterNextAction(frames: DataFrame*): Unit =

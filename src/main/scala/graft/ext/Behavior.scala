@@ -279,49 +279,6 @@ object Behavior {
           / col("n_transitions").cast("double")).as("avg_nll"))
   }
 
-  /** Funnel conversion rates with Wilson 95% confidence intervals:
-    * per transition, entrants, conversions, the raw rate, and the
-    * score-interval bounds — the uncertainty-aware readout a growth
-    * dashboard needs before comparing funnels of different sizes.
-    *
-    * Exactness: counts are exact integers; rate and the Wilson bounds
-    * are fixed IEEE chains over them with the z = 1.96 literal,
-    * mirrored parenthesis-for-parenthesis (z² stays the expression
-    * 1.96 * 1.96 on both engines — never a pre-squared decimal, whose
-    * parse could differ from the IEEE product). Mart-grain output. */
-  def funnelConversion(
-      events: DataFrame,
-      step1: String = "signup", step2: String = "view", step3: String = "purchase")
-      : DataFrame = {
-    val f = funnel(events, step1, step2, step3)
-    val counts = f.agg(
-      count(col(s"${step1}_ts")).as("n1"),
-      count(col(s"${step2}_ts")).as("n2"),
-      count(col(s"${step3}_ts")).as("n3"))
-    val pairs = counts.select(
-      lit(s"$step1>$step2").as("transition"),
-      col("n1").as("n_entered"), col("n2").as("n_converted"))
-      .unionByName(counts.select(lit(s"$step2>$step3").as("transition"),
-        col("n2").as("n_entered"), col("n3").as("n_converted")))
-    val n = col("n_entered").cast("double")
-    val x = col("n_converted").cast("double")
-    val z = lit(1.96)
-    val z2 = z * z
-    val phat = x / n
-    val denom = lit(1.0) + z2 / n
-    val centerNum = phat + z2 / (lit(2.0) * n)
-    val rad = z * sqrt(phat * (lit(1.0) - phat) / n
-      + z2 / (lit(4.0) * n * n))
-    pairs.select(
-      col("transition"), col("n_entered"), col("n_converted"),
-      when(col("n_entered") === 0L, lit(null).cast("double"))
-        .otherwise(phat).as("conv_rate"),
-      when(col("n_entered") === 0L, lit(null).cast("double"))
-        .otherwise((centerNum - rad) / denom).as("wilson_lo"),
-      when(col("n_entered") === 0L, lit(null).cast("double"))
-        .otherwise((centerNum + rad) / denom).as("wilson_hi"))
-  }
-
   /** Time-to-convert quantiles per funnel transition: the exact
     * nearest-rank p25/p50/p75/p90 (plus pair count) of the latency, in
     * whole seconds, between consecutive completed [[funnel]] stages —

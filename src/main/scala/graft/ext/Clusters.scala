@@ -133,7 +133,7 @@ object Clusters {
       .localCheckpoint(true)
 
     var ranks = base.select(col("id"), col("n"), expr(s"$Scale div n").as("units"))
-    (1 to iterations).foreach { _ =>
+    (1 to iterations).foreach { i =>
       val contrib = edges
         .join(deg, Seq("src"))
         .join(ranks.select(col("id").as("src"), col("units")), Seq("src"))
@@ -148,9 +148,9 @@ object Clusters {
         .localCheckpoint(true)
       // the new ranks checkpoint is eagerly materialized: the
       // superseded round's pinned table is unreachable — free it.
-      // (Iteration 1's `prev` is the lazy seed over `base`, which the
-      // strict root match refuses — base stays live for every round.)
-      graft.core.CacheLifecycle.freeSupersededCheckpoint(prev)
+      // (Iteration 1's `prev` is the lazy seed over `base`, which
+      // stays live for every round.)
+      if (i > 1) graft.core.CacheLifecycle.freeSupersededCheckpoint(prev)
     }
     edges.unpersist()
     // base fed only the in-loop joins; the final ranks checkpoint is

@@ -906,6 +906,22 @@ object Profiling {
     java.math.BigDecimal.valueOf(x)
       .setScale(0, java.math.RoundingMode.HALF_UP).longValue
 
+  /** [[powerIterate]] results keyed by (session, input plan, params):
+    * the loadings and projection queries share one covariance job
+    * instead of re-running the O(n·d²) pass per consumer. The model is
+    * d doubles + two longs — cache residency is trivial. */
+  private val pcaCache = new graft.bindings.SessionCache[
+    (Int, String, String, Int, Int, Int), (Array[Double], Long, Long)]
+
+  private def powerIterateCached(
+      df: DataFrame, idCol: String, embCol: String,
+      dim: Int, unitsPerValue: Int,
+      iterations: Int): (Array[Double], Long, Long) =
+    pcaCache.getOrElseUpdate(df.sparkSession,
+      (df.queryExecution.analyzed.semanticHash(),
+        idCol, embCol, dim, unitsPerValue, iterations))(
+      powerIterate(df, idCol, embCol, dim, unitsPerValue, iterations))
+
   /** Power iteration for the top principal component over the
     * [[covariancePairs]] matrix. Fixed `iterations` steps from the
     * deterministic uniform start v₀ = 1/√d — NOT run to a convergence
@@ -927,23 +943,6 @@ object Profiling {
     * precedent), and [[pcaProjection]] is a scan with the component as
     * a broadcast literal. Returns (component, λ units at 1e-6, trace
     * units at 1e-9). */
-  /** [[powerIterate]] results keyed by (session, input plan, params):
-    * the loadings and projection queries share one covariance job
-    * instead of re-running the O(n·d²) pass per consumer. The model is
-    * d doubles + two longs — cache residency is trivial. */
-  private val pcaCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, String, String, Int, Int, Int),
-      (Array[Double], Long, Long)]
-
-  private def powerIterateCached(
-      df: DataFrame, idCol: String, embCol: String,
-      dim: Int, unitsPerValue: Int,
-      iterations: Int): (Array[Double], Long, Long) =
-    pcaCache.getOrElseUpdate(
-      (df.sparkSession, df.queryExecution.analyzed.semanticHash(),
-        idCol, embCol, dim, unitsPerValue, iterations),
-      powerIterate(df, idCol, embCol, dim, unitsPerValue, iterations))
-
   private def powerIterate(
       df: DataFrame, idCol: String, embCol: String,
       dim: Int, unitsPerValue: Int,

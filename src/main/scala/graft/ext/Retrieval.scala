@@ -334,14 +334,6 @@ object Retrieval {
       .option("path", path)
       .saveAsTable(table)
 
-  /** Read a [[writeBucketedIndex]] table back as the probe input. The
-    * frame is plan-compatible with [[scoredPostings]]' output — every
-    * probe ([[bm25FromPostings]], [[bm25TruncatedFromPostings]], the
-    * recall sweep) accepts it unchanged. */
-  def fromBucketedIndex(
-      spark: org.apache.spark.sql.SparkSession, table: String): DataFrame =
-    spark.table(table)
-
   def bm25Search(
       docs: DataFrame, idCol: String, textCol: String,
       queryModEvery: Int, k: Int,

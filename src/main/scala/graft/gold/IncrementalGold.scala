@@ -144,7 +144,7 @@ private[gold] object IncrementalAnchored {
     // streamed replay), a sibling's action can fire it first: `prev` is
     // then freed early and the output re-reads the still-live mart —
     // correct, only not cached. A listener keyed to the consuming
-    // execution would fix that (ROADMAP direction 3).
+    // execution would fix that (the plan-keyed release item on ROADMAP).
     graft.core.CacheLifecycle.unpersistAfterNextAction(prev)
     if (deltaMax.isEmpty) prev // empty delta: nothing to maintain
     else {

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.bindings.SessionCache
+
 /** Streaming→lakehouse bridge for the incremental gold maintainers: the
   * withheld CDC day arrives as a REAL file-source stream, and every
   * micro-batch runs the production landing sequence inside
@@ -74,11 +76,6 @@ object IncrementalGoldStream {
   def trendsViaStream(spark: SparkSession, dir: String, slices: Int = 3): DataFrame =
     finalMart(spark, dir, slices, GoldMarts.trendsDaily)
 
-  /** The shared replay harness: withhold the replay day from silver,
-    * build mart v0 from the base, stream the day's rows back user-hash-
-    * sliced one file per micro-batch, and land each batch with
-    * `maintain(prevMart, updatedSilver, batch)` under the swap-write
-    * discipline. Returns the final mart version. */
   /** The base-silver parquet + sliced input files are identical for all
     * three maintainers at a given (session, dir, slices) — prepare them
     * once per session (the [[graft.bindings.Conformed]] memoization
@@ -86,12 +83,11 @@ object IncrementalGoldStream {
     * and mart-version chain (those are the mutable state under test),
     * but the immutable inputs stop being re-conformed and re-written
     * three times. */
-  private val prepCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), (String, String)]
+  private val prepCache = new SessionCache[(String, Int), (String, String)]
 
   private def preparedInputs(
       spark: SparkSession, dir: String, slices: Int): (String, String) =
-    prepCache.getOrElseUpdate((spark, dir, slices), {
+    prepCache.getOrElseUpdate(spark, (dir, slices)) {
       val revenue = graft.bindings.Conformed.orderRevenueCached(spark, dir)
       val d = to_date(lit(graft.gold.IncrementalReplay.replayDate))
       val root = Files.createTempDirectory("graft-incr-stream-base").toString
@@ -108,11 +104,10 @@ object IncrementalGoldStream {
           .coalesce(1).write.mode("append").parquet(inDir)
       }
       (basePath, inDir)
-    })
+    }
 
   /** Final mart path by mart name, after the drain. */
-  private val martsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), Map[String, String]]
+  private val martsCache = new SessionCache[(String, Int), Map[String, String]]
 
   /** ONE stream session maintains all three marts: the replay day
     * drains once (one checkpoint, one set of micro-batch triggers), and
@@ -127,7 +122,7 @@ object IncrementalGoldStream {
     * maintenance work). */
   private def maintainedMarts(
       spark: SparkSession, dir: String, slices: Int): Map[String, String] =
-    martsCache.getOrElseUpdate((spark, dir, slices), {
+    martsCache.getOrElseUpdate(spark, (dir, slices)) {
       val (basePath, inDir) = preparedInputs(spark, dir, slices)
       val delta = spark.read.parquet(inDir)
 
@@ -169,5 +164,5 @@ object IncrementalGoldStream {
         .start()
       q.awaitTermination()
       maintained.map(m => m.name -> versionPath(m, version)).toMap
-    })
+    }
 }

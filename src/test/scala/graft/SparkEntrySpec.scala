@@ -17,6 +17,16 @@ class SparkEntrySpec extends SparkSpec {
     assert(q == o, s"mismatch: only-in-queries=${q -- o}, only-in-oracle=${o -- q}")
   }
 
+  test("the registry concatenation rejects a name defined twice") {
+    val a = Gated("qa", (s, _) => s.range(1).toDF(), "SELECT 1")
+    val b = Gated("qb", (s, _) => s.range(1).toDF(), "SELECT 2")
+    assert(Gated.concat(Seq(a), Seq(b)).map(_.name) == Seq("qa", "qb"))
+    val e = intercept[IllegalArgumentException](
+      Gated.concat(Seq(a, b), Seq(Gated("qa", a.run, "SELECT 3"))))
+    assert(e.getMessage.contains("qa") && !e.getMessage.contains("qb"))
+    assert(SparkEntry.registry.size == SparkEntry.queries.size)
+  }
+
   test("ScaleRouting: every spec operator and its scale-safe sibling are gated queries") {
     val q = SparkEntry.queries.keySet
     ScaleRouting.siblings.foreach { case (spec, sib) =>

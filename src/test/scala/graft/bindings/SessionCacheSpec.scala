@@ -1,5 +1,7 @@
 package graft.bindings
 
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSpec
 
 /** Lifecycle bounds of the session-scoped spine store (r14): entries
@@ -8,7 +10,7 @@ import graft.SparkSpec
 class SessionCacheSpec extends SparkSpec {
 
   test("entries are per-session, purgeable per-session, and rebuilt after invalidate") {
-    val cache = new SessionCache[String]
+    val cache = new SessionCache[String, DataFrame]
     val s2 = spark.newSession()
     var builds = 0
     def get(s: org.apache.spark.sql.SparkSession) =
@@ -29,7 +31,7 @@ class SessionCacheSpec extends SparkSpec {
   }
 
   test("getOrRebuild: persisted entry is reused; unpersisted entry is rebuilt") {
-    val cache = new SessionCache[String]
+    val cache = new SessionCache[String, DataFrame]
     var builds = 0
     def get() = cache.getOrRebuild(spark, "k") {
       builds += 1
@@ -50,7 +52,7 @@ class SessionCacheSpec extends SparkSpec {
     // unpersisted entry must not BOTH evaluate `fresh` — the loser's
     // persisted blocks would leak until context teardown. The per-key
     // monitor serializes the rebuild; builds counts evaluations.
-    val cache = new SessionCache[String]
+    val cache = new SessionCache[String, DataFrame]
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val live = new scala.collection.mutable.ArrayBuffer[
       org.apache.spark.sql.DataFrame]()
@@ -94,7 +96,7 @@ class SessionCacheSpec extends SparkSpec {
   }
 
   test("purge predicate drives eviction (the stopped-context path)") {
-    val cache = new SessionCache[String]
+    val cache = new SessionCache[String, DataFrame]
     val s2 = spark.newSession()
     cache.getOrElseUpdate(spark, "k")(spark.range(1).toDF("n"))
     cache.getOrElseUpdate(s2, "k")(s2.range(1).toDF("n"))
@@ -105,5 +107,24 @@ class SessionCacheSpec extends SparkSpec {
     assert(cache.size == 1)
     assert(cache.purgeWhere(_.sparkContext.isStopped) == 0,
       "live context must purge nothing")
+  }
+
+  test("non-frame values share the lifecycle: a stopped context purges them") {
+    // the shape of the streaming replay inputs and the PCA model cache:
+    // a plain value per (session, key), no DataFrame to unpersist
+    val cache = new SessionCache[(String, Int), (String, String)]
+    val s2 = spark.newSession()
+    var builds = 0
+    def get(s: org.apache.spark.sql.SparkSession) =
+      cache.getOrElseUpdate(s, ("dir", 3)) { builds += 1; ("base", "in") }
+    assert(get(spark) == (("base", "in")) && get(s2) == (("base", "in")))
+    assert(get(spark) == (("base", "in")) && builds == 2 && cache.size == 2)
+    // the application-end listener's purge: every session on the
+    // stopped context goes, not only the one that registered the hook
+    val sc = spark.sparkContext
+    assert(cache.purgeWhere(_.sparkContext eq sc) == 2)
+    assert(cache.size == 0)
+    get(spark)
+    assert(builds == 3, "a purged value must rebuild on next access")
   }
 }

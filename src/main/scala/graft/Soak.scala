@@ -37,9 +37,7 @@ object SoakGen {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "/tmp/soak10x"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = graft.core.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-soak-gen")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-soak-gen")
 
     def copyIdx = explode(array((0 until copies).map(i => lit(i.toLong)): _*))
 
@@ -180,72 +178,35 @@ object SoakBench {
 
   def main(args: Array[String]): Unit = {
     val dataDir = if (args.length > 0) args(0) else "/tmp/soak10x"
-    val spark = graft.core.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-soak")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-soak")
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     // SPARK_GRAFT_SOAK_ALL=1 sweeps the FULL gated surface (not just
-    // the heaviest tier) with a per-query wall timeout so the three
-    // documented spec forms (graft.ScaleRouting) cannot hang the run:
-    // on timeout the query's job group is cancelled and the row is
-    // recorded timed_out — expected ONLY for those spec forms.
+    // the heaviest tier) under the per-query wall timeout of
+    // Harness.timed, so the three documented spec forms
+    // (graft.ScaleRouting) cannot hang the run: on timeout the query's
+    // job group is cancelled and the row is recorded timed_out —
+    // expected ONLY for those spec forms.
     val sweepAll = sys.env.get("SPARK_GRAFT_SOAK_ALL").contains("1")
-    val timeoutSec =
-      sys.env.getOrElse("SPARK_GRAFT_SOAK_TIMEOUT", "600").toInt
     val pool = SoakQueries ++ (
       if (sweepAll) SparkEntry.queries.keys.toSeq.sorted
         .filterNot(SoakQueries.contains)
       else Nil)
-    val selected = pool.filter(n => only.forall(_.exists(n.startsWith)))
+    val selected = pool.filter(Harness.selected)
     val unknown = selected.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown soak queries: ${unknown.mkString(",")}")
-    var exec = java.util.concurrent.Executors.newSingleThreadExecutor()
-    def runCapped(name: String, dir: String): (Long, Boolean, Boolean) = {
+    // every sweep row and capped-leg row runs through Harness.timed,
+    // which returns only once a timed-out query has stopped unwinding:
+    // the next row starts on a quiet session, and its listener snapshot
+    // never holds the dying job's metrics
+    def timedQuery(name: String, dir: String): Harness.Timed = {
       val fn = SparkEntry.queries(name)
-      val task = exec.submit(new java.util.concurrent.Callable[Long] {
-        def call(): Long = {
-          // job group is thread-local: set it in the worker thread so
-          // a timeout can cancel exactly this query's jobs
-          spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-          try fn(spark, dir).count()
-          finally spark.sparkContext.clearJobGroup()
-        }
-      })
-      try (task.get(timeoutSec.toLong, java.util.concurrent.TimeUnit.SECONDS),
-        true, false)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          spark.sparkContext.cancelJobGroup(name)
-          task.cancel(true)
-          // cancellation is asynchronous: the worker thread is still
-          // unwinding the cancelled Spark job, and a next query submitted
-          // now would QUEUE behind it — its own timeout budget would
-          // absorb the predecessor's cancellation time and its listener
-          // snapshot the dying job's metrics. A marker task through the
-          // same single-thread executor completes only once the worker is
-          // idle again; if even that times out, abandon the executor so
-          // the next query gets a fresh idle worker.
-          val marker = exec.submit(new java.util.concurrent.Callable[Long] {
-            def call(): Long = 0L
-          })
-          try marker.get(120L, java.util.concurrent.TimeUnit.SECONDS)
-          catch {
-            case _: java.util.concurrent.TimeoutException =>
-              Console.err.println(
-                s"[soak] $name still unwinding 120s after cancel; " +
-                  "recreating the worker executor")
-              exec.shutdownNow()
-              exec = java.util.concurrent.Executors.newSingleThreadExecutor()
-          }
-          Console.err.println(s"[soak] $name TIMED OUT after ${timeoutSec}s")
-          (-1L, false, true)
-        case e: Throwable =>
-          Console.err.println(s"[soak] $name FAILED: ${e.getMessage}")
-          (-1L, false, false)
-      }
+      val r = Harness.timed(spark, name)(fn(spark, dir))
+      if (r.timedOut)
+        Console.err.println(s"[soak] $name TIMED OUT after ${Harness.timeoutSec}s")
+      r.error.foreach(e => Console.err.println(s"[soak] $name FAILED: ${e.getMessage}"))
+      r
     }
     // Storage-pool telemetry + debris hygiene (r14, the q141 in-sweep
     // stall diagnosis): the spec-form floods completed ISOLATED at 10×
@@ -282,18 +243,16 @@ object SoakBench {
       // coin flip, not a margin). Sampling IS the operator's own
       // documented corpus-scale rule; the gated sf0.01 form stays
       // unsampled (stride defaults to 1 outside this branch).
-      // try/finally: runCapped catches Throwable today, but a stride
+      // try/finally: Harness.timed catches Throwable today, but a stride
       // leaked past an escaping exception would silently sample every
       // later truncationRecallSweep — scope it structurally
       val isAudit = ScaleRouting.specAudits.contains(name)
       if (isAudit) spark.conf.set("spark.graft.audit.queryStride", "8")
-      val t0 = System.nanoTime()
-      val (rows, ok, timedOut) =
-        try runCapped(name, dataDir)
+      val run =
+        try timedQuery(name, dataDir)
         finally {
           if (isAudit) spark.conf.unset("spark.graft.audit.queryStride")
         }
-      val sec = (System.nanoTime() - t0) / 1e9
       // per-query cache isolation: 340+ queries in one JVM accumulate
       // persisted frames (session binding caches, per-query persists)
       // into the unified pool's protected storage half, starving the
@@ -306,8 +265,8 @@ object SoakBench {
       // attribution honest (private API waitUntilEmpty is inaccessible)
       Thread.sleep(300)
       val (sw, sr, ms, ds, pw) = listener.snapshotAndReset()
-      println(f"""[soak] {"q":"$name","sec":$sec%.2f,"rows":$rows,"ok":$ok,"timed_out":$timedOut,"shuffle_write_mb":${sw / 1048576},"shuffle_read_mb":${sr / 1048576},"mem_spill_mb":${ms / 1048576},"disk_spill_mb":${ds / 1048576},"peak_task_shuffle_write_mb":${pw / 1048576},"storage_used_start_mb":$storageStartMb}""")
-      (name, sec, ok, timedOut)
+      println(f"""[soak] {"q":"$name","sec":${run.sec}%.2f,"rows":${run.rows},"ok":${run.ok},"timed_out":${run.timedOut},"shuffle_write_mb":${sw / 1048576},"shuffle_read_mb":${sr / 1048576},"mem_spill_mb":${ms / 1048576},"disk_spill_mb":${ds / 1048576},"peak_task_shuffle_write_mb":${pw / 1048576},"storage_used_start_mb":$storageStartMb}""")
+      (name, run.sec, run.ok, run.timedOut)
     }
 
     // Harness legs — the AQE skew probe, the ingest rate-cap contract,
@@ -318,18 +277,24 @@ object SoakBench {
     // hot key (guard "missed" on raw) would gate local iteration on an
     // assertion it never asked for.
     val (guardFailed, cappedFailed, streamCapFailed) =
-      if (only.nonEmpty)
+      if (Harness.only.nonEmpty)
         (Seq.empty[String], Seq.empty[String], Seq.empty[String])
       else {
     // ---- AQE skew-split proof on the planted hot restaurant ----
     // The restaurant-grain rollup joins lineitem (hot l_suppkey) to
     // orders; thresholds lowered size-relatively so the 10x-local soak
-    // exercises the same OptimizeSkewedJoin a cluster run would.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "2m")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
+    // exercises the same OptimizeSkewedJoin a cluster run would. The
+    // settings hold for the probe only: each key gets its previous
+    // value back, so the later legs run on the session's own settings.
+    val probeConfs = Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2m",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0")
+    val prevConfs = probeConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val (probeRows, plan) = try {
+    probeConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     val li = graft.core.Tables.lineitem(spark, dataDir)
       .select(col("l_suppkey"), col("l_orderkey"), col("l_partkey"),
         col("l_extendedprice"), col("l_discount"))
@@ -360,8 +325,11 @@ object SoakBench {
     // collect() executes THIS dataset's queryExecution — count() would
     // build a separate one and leave this plan unexecuted (isFinalPlan
     // false, no AQE decisions to observe)
-    val probeRows = skewJoin.collect().head.getLong(0)
-    val plan = skewJoin.queryExecution.executedPlan.toString
+    (skewJoin.collect().head.getLong(0),
+      skewJoin.queryExecution.executedPlan.toString)
+    } finally prevConfs.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
     val skewObserved = plan.contains("skew=true")
     println(s"""[soak] {"q":"skew_probe_rows","rows":$probeRows}""")
     println(s"""[soak] {"q":"skew_probe","skew_split_observed":$skewObserved}""")
@@ -452,17 +420,15 @@ object SoakBench {
     val onCapped =
       (ScaleRouting.ingestContract + "q98_stream_stream_join").toSeq.sorted
     val cappedFailed = onCapped.flatMap { name =>
-      // through runCapped: the capped leg inherits the per-query wall
+      // through timedQuery: the capped leg inherits the per-query wall
       // timeout + job-group cancellation — if the cap ever fails to tame
       // the input (schema drift, cap regression) the run records a
       // timeout row instead of hanging indefinitely. A timeout here IS a
       // failure: the whole point of the leg is that capped input is fast.
-      val tJ = System.nanoTime()
-      val (jRows, jOk, jTimedOut) = runCapped(name, capDir)
-      val jSec = (System.nanoTime() - tJ) / 1e9
-      println(f"""[soak] {"q":"${name}_on_rate_capped_ingest","sec":$jSec%.2f,"rows":$jRows,"ok":$jOk,"timed_out":$jTimedOut}""")
+      val j = timedQuery(name, capDir)
+      println(f"""[soak] {"q":"${name}_on_rate_capped_ingest","sec":${j.sec}%.2f,"rows":${j.rows},"ok":${j.ok},"timed_out":${j.timedOut}}""")
       spark.catalog.clearCache()
-      if (!jOk) Seq(s"${name}_on_rate_capped_ingest") else Nil
+      if (!j.ok) Seq(s"${name}_on_rate_capped_ingest") else Nil
     }
     (guardFailed, cappedFailed, streamCapFailed)
     }
@@ -488,7 +454,6 @@ object SoakBench {
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val specToJson = expectedTimeouts.map("\"" + _ + "\"").mkString("[", ",", "]")
     println(f"""[soak] {"q":"TOTAL","sec":$total%.2f,"n":${results.size},"failed":$failedJson,"spec_form_timeouts":$specToJson}""")
-    exec.shutdownNow()
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

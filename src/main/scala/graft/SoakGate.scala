@@ -268,19 +268,8 @@ object SoakGate {
     val (vioTyped, notesEval) = evaluateTyped(rows, baseline, fragment)
     // fresh session only if a replay-class bound breach actually needs it
     var rerunSparkUsed = false
-    lazy val rerunSpark = {
-      val s = graft.core.GraftSession.local(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-soakgate")
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    lazy val rerunSpark = Harness.session("graft-soakgate")
     val cappedSuffix = "_on_rate_capped_ingest"
-    // the re-run inherits the sweep's wall-timeout discipline: a
-    // replay row that regresses into a STALL (the q141-class shape —
-    // zero progress, not slow-but-finishing) must produce a
-    // bound-breaching wall and a red gate, not a hung CI process
-    val rerunTimeoutSec =
-      sys.env.getOrElse("SPARK_GRAFT_SOAK_TIMEOUT", "600").toLong
     val rerun: String => Option[Double] = q =>
       rerunDir.flatMap { dir =>
         // capped-leg rows are the base query against the -ratecap corpus
@@ -290,50 +279,20 @@ object SoakGate {
         SparkEntry.queries.get(name)
           .filter(_ => java.nio.file.Files.isDirectory(
             java.nio.file.Paths.get(runDir)))
-          .map { fn =>
+          .flatMap { fn =>
             rerunSparkUsed = true
-            // a FRESH single-thread DAEMON executor per re-run (r14
-            // advisor): a prior re-run whose Spark action shrugged off
-            // the interrupt after cancelJobGroup cannot occupy this
-            // worker, so queue wait never counts against the isolated
-            // wall (inflated walls would convert contention into a
-            // false "real regression"); daemon threads also cannot
-            // keep a green gate's JVM alive after main returns.
-            val exec = java.util.concurrent.Executors.newSingleThreadExecutor(
-              (r: Runnable) => {
-                val t = new Thread(r, s"soakgate-rerun-$q")
-                t.setDaemon(true)
-                t
-              })
-            try {
-              val task = exec.submit(
-                new java.util.concurrent.Callable[(Double, Long)] {
-                  def call(): (Double, Long) = {
-                    rerunSpark.sparkContext
-                      .setJobGroup(q, q, interruptOnCancel = true)
-                    // wall measured INSIDE the worker, around the
-                    // plan+action only — never around submit/queue
-                    val t0 = System.nanoTime()
-                    try {
-                      val n = fn(rerunSpark, runDir).count()
-                      ((System.nanoTime() - t0) / 1e9, n)
-                    } finally rerunSpark.sparkContext.clearJobGroup()
-                  }
-                })
-              val (sec, n) =
-                try task.get(rerunTimeoutSec, java.util.concurrent.TimeUnit.SECONDS)
-                catch {
-                  case _: java.util.concurrent.TimeoutException =>
-                    rerunSpark.sparkContext.cancelJobGroup(q)
-                    task.cancel(true)
-                    // a timed-out wall reports AS the timeout: always at
-                    // or above every bound, so the violation stands
-                    (rerunTimeoutSec.toDouble, -1L)
-                }
-              rerunSpark.catalog.clearCache()
-              println(f"""[soakgate] {"q":"replay_rerun","query":"$q","sec":$sec%.2f,"rows":$n,"timed_out":${n < 0}}""")
-              sec
-            } finally exec.shutdownNow()
+            // the re-run inherits the sweep's wall-timeout discipline: a
+            // replay row that regresses into a STALL (the q141-class
+            // shape — zero progress, not slow-but-finishing) must produce
+            // a bound-breaching wall and a red gate, not a hung CI
+            // process. A timed-out wall reports AS the timeout: at or
+            // above every bound, so the violation stands. A re-run that
+            // throws has no wall: the violation stands as unavailable.
+            val r = Harness.timed(rerunSpark, q)(fn(rerunSpark, runDir))
+            rerunSpark.catalog.clearCache()
+            println(f"""[soakgate] {"q":"replay_rerun","query":"$q","sec":${r.sec}%.2f,"rows":${r.rows},"timed_out":${r.timedOut}}""")
+            r.error.foreach(e => println(s"[soakgate] $q re-run FAILED: ${e.getMessage}"))
+            if (r.error.isEmpty) Some(r.sec) else None
           }
       }
     val (vioConfirmed, rerunNotes) = confirmReplay(vioTyped, rerun)

@@ -44,14 +44,11 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.local(cpus.toInt, "graft-verify")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-verify")
     // optional name-prefix filter for local iteration (same contract as
     // Bench); the driver leaves it unset → all queries
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     val selected = SparkEntry.queries.toSeq
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+      .filter { case (n, _) => Harness.selected(n) }
     val failed = dumpAll(spark, sfDir, outDir, selected)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

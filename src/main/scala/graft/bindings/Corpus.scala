@@ -112,17 +112,15 @@ object Corpus {
     * sibling's live frame mid-scan). Reuse is exact because the stamp
     * pins the source content; the lock serializes the one first build
     * per JVM. (An index is rebuilt only when no catalog entry exists —
-    * a fresh JVM always rewrites, so external tmp cleanup between JVMs
-    * is harmless.) */
+    * a fresh JVM always rewrites, into its own scratch root, which is
+    * deleted at exit.) */
   private def diskIndexTable(
       spark: SparkSession, prefix: String, stamp: String)
       (write: (String, String) => Unit): DataFrame =
     diskIndexLock.synchronized {
       val table = s"${prefix}_$stamp"
       if (!spark.catalog.tableExists(table)) {
-        val path = new java.io.File(
-          sys.props("java.io.tmpdir"), table).getAbsolutePath
-        write(table, path)
+        write(table, graft.core.Scratch.dir(table).toString)
       }
       spark.table(table)
     }
@@ -179,8 +177,7 @@ object Corpus {
         graft.ext.Similarity.writeIvfPqIndex(
           Tables.embeddings(spark, dir), "vec_id", "embedding",
           tableFor = table,
-          pathFor = p => new java.io.File(
-            sys.props("java.io.tmpdir"), table(p)).getAbsolutePath)
+          pathFor = p => graft.core.Scratch.dir(table(p)).toString)
       }
       (spark.table(table("codes")), spark.table(table("book")),
         spark.table(table("cents")))

@@ -119,7 +119,7 @@ object CdcQueries {
     // the whole table, which the oracle derives independently ----
     Gated("q83_watermark_replay", (s, dir) => {
       val lake = graft.io.Lakehouse(
-        java.nio.file.Files.createTempDirectory("graft-replay").toString)
+        graft.core.Scratch.dir("graft-replay").toString)
       val pipe = new graft.pipeline.CdcPipeline(s, lake, defaultWatermark = "1900-01-01")
       val orders = Tables.orders(s, dir)
       val cut = "1998-01-01 00:00:00"

@@ -121,10 +121,4 @@ object SnapshotDiff {
       .withColumn("cdc_action", lit("update"))
     inserts.union(updates).union(deletes).withColumn("cdc_timestamp", cdcTimestamp)
   }
-
-  /** Bootstrap previous snapshot: empty frame borrowing the current
-    * schema (reference `cdc_metrics_job_bronze.py:92-95`). */
-  def emptyLike(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      df.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
 }

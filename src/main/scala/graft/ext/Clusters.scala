@@ -106,6 +106,18 @@ object Clusters {
     * lineage per round (O(1) plan depth at any iteration count). The
     * node count rides in as a broadcast scalar, not a driver constant.
     *
+    * Pins: every superseded round's checkpoint, `base` and the edge
+    * cache are freed before return, but two eager checkpoints stay
+    * pinned for the session: `deg` and the final ranks, which the
+    * returned frame reads (checkpoint blocks cannot be recomputed, so
+    * they cannot be freed while the result is live). `clearCache()`
+    * does not reach them; Spark's ContextCleaner frees them at a GC
+    * after the caller has dropped the result. A caller that owns the
+    * final action and calls this repeatedly frees them itself: take
+    * `sparkContext.getPersistentRDDs.keySet` before the call, and after
+    * its last action on the result unpersist the RDD ids the call added
+    * (`ClustersSpec` counts the same difference).
+    *
     * @param pairs undirected edges (one row per pair, `id_a`/`id_b`)
     * @param nodes one row per graph node (isolated nodes rank at the
     *              teleport floor)

@@ -15,8 +15,8 @@ import graft.functions.{Portable, Sketches, WordShingles}
   * recompute every stage bit-for-bit.
   *
   * Scale design:
-  *  - exact dedup is a single hash aggregate on the content hash — the
-  *    map-side partial collapses duplicates before the shuffle;
+  *  - exact duplicate groups are a single hash aggregate on the key —
+  *    the map-side partial collapses duplicates before the shuffle;
   *  - MinHash signatures are ONE aggregate producing `numPerms` min
   *    columns (no numPerms× row blowup); LSH banding then self-joins on
   *    (band, key) — the shuffle is on band keys, whose cardinality scales
@@ -26,14 +26,6 @@ import graft.functions.{Portable, Sketches, WordShingles}
   */
 object Dedup {
 
-  /** Exact full-row duplicate groups (the testdata plants real duplicate
-    * rows in `lineitem`). Returns one row per duplicated tuple with its
-    * multiplicity. */
-  def exactRowGroups(df: DataFrame): DataFrame =
-    df.groupBy(df.columns.map(col): _*)
-      .agg(count(lit(1)).as("dup_count"))
-      .filter(col("dup_count") > 1)
-
   /** Duplicate-key groups: keys appearing more than once (the planted
     * duplicates in the testdata are key-level — rows share a PK but
     * differ in payload, the realistic CDC-ingest shape). */
@@ -41,16 +33,6 @@ object Dedup {
     df.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("dup_count"))
       .filter(col("dup_count") > 1)
-
-  /** Exact content dedup: canonical (min) id per distinct text. NULL
-    * texts are excluded (the [[minhashSignatures]] rule) — md5(NULL) is
-    * NULL and groupBy keeps one NULL key, so unknown contents would
-    * otherwise collapse into one fake "duplicate" group and a
-    * keep-canonical pass would delete docs never actually compared. */
-  def exactByContent(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.filter(col(textCol).isNotNull)
-      .groupBy(md5(col(textCol)).as("content_md5"))
-      .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("dup_count"))
 
   /** MinHash signatures: one row per doc, `sig` = array<long> of
     * `numPerms` values. Computed by the one-pass native

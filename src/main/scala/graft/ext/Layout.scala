@@ -45,19 +45,4 @@ object Layout {
         min(col("b")).as("min_b"), max(col("b")).as("max_b"),
         min(col("z")).as("min_z"), max(col("z")).as("max_z"))
   }
-
-  /** Physically lay a frame out along the z-curve: range-partition on
-    * the z-value (so files hold contiguous z-ranges) and sort within
-    * partitions (so row groups are z-ordered for fine-grained skipping).
-    * The range boundaries come from Spark's reservoir sample — layout,
-    * not results, so sampling nondeterminism is acceptable here. */
-  def layoutByZ(
-      df: DataFrame, aCol: String, bCol: String,
-      bits: Int, partitions: Int): DataFrame = {
-    val withZ = df.withColumn("__z", zValue(col(aCol), col(bCol), bits))
-    withZ
-      .repartitionByRange(partitions, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-  }
 }

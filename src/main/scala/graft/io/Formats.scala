@@ -70,30 +70,25 @@ object Formats {
     * slower (q69 0.31→0.39 s, q118 0.88→1.18 s — 32 near-empty gzip
     * streams cost more setup than they parallelize). The file count now
     * derives from the input's PLANNED bytes (`optimizedPlan.stats` — a
-    * plan-only probe): one file per `targetFileBytes`, capped at
-    * defaultParallelism. Inputs above `maxSpreadBytes` return untouched
+    * plan-only probe): one file per [[TargetFileBytes]], capped at
+    * defaultParallelism. Inputs above [[MaxSpreadBytes]] return untouched
     * WITHOUT the `.rdd` width probe — at 100 TB the scan is already
     * wide, and probing `.rdd` on a shuffled frame would finalize the
     * adaptive plan and execute the upstream exchanges just to read a
     * partition count (the [[graft.core.Scans.spread]] SCAN-ONLY
     * caveat). Below the cap the width probe is taken only on frames the
     * in-repo sinks actually pass (bare scans and cached spines), where
-    * it is plan-only. Both knobs are session-configurable; the defaults
-    * keep q105/q117's parallel-compression win (multi-MB plan bytes →
-    * many files) while trivially small outputs stay single-stream. */
-  private[io] val TargetFileBytesKey = "spark.graft.textsink.targetFileBytes"
-  private[io] val MaxSpreadBytesKey = "spark.graft.textsink.maxSpreadBytes"
+    * it is plan-only. Both sizes are constants: 256 KiB per file keeps
+    * q105/q117's parallel-compression win (multi-MB plan bytes → many
+    * files) while trivially small outputs stay single-stream. */
+  private val TargetFileBytes = 256L * 1024
+  private val MaxSpreadBytes = 4L * 1024 * 1024 * 1024
   private def spreadOut(df: DataFrame): DataFrame = {
-    val conf = df.sparkSession.conf
-    val target = math.max(1L,
-      conf.get(TargetFileBytesKey, (256L * 1024).toString).toLong)
-    val cap = BigInt(
-      conf.get(MaxSpreadBytesKey, (4L * 1024 * 1024 * 1024).toString).toLong)
     val n = df.sparkSession.sparkContext.defaultParallelism
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes > cap) df
+    if (bytes > MaxSpreadBytes) df
     else {
-      val want = ((bytes + target - 1) / target).min(BigInt(n)).toInt
+      val want = ((bytes + TargetFileBytes - 1) / TargetFileBytes).min(BigInt(n)).toInt
       if (want <= 1) df
       else if (df.rdd.getNumPartitions >= want) df
       else df.repartition(want)

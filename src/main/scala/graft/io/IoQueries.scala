@@ -16,7 +16,7 @@ object IoQueries {
     // for dates / doubles / nullable strings) ----
     Gated("q105_csv_roundtrip", (s, dir) => {
       val conformed = Conformed.orderRevenueCached(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("graft-csv").toString
+      val tmp = graft.core.Scratch.dir("graft-csv").toString
       graft.io.Formats.writeCsv(conformed, tmp)
       graft.io.Formats.readCsv(s, tmp, conformed.schema)
         .orderBy(col("order_id"), col("lineitem_id"), col("item_category"),
@@ -33,7 +33,7 @@ object IoQueries {
     // planted duplicate rows survive bit-exact) ----
     Gated("q106_orc_roundtrip", (s, dir) => {
       val li = Tables.lineitem(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("graft-orc").toString
+      val tmp = graft.core.Scratch.dir("graft-orc").toString
       graft.io.Formats.writeOrc(li, tmp)
       graft.io.Formats.readOrc(s, tmp, li.schema)
         .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"),
@@ -46,7 +46,7 @@ object IoQueries {
     // payload fidelity incl. unicode/newline escapes is the point) ----
     Gated("q69_json_roundtrip", (s, dir) => {
       val docs = Tables.documents(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("graft-json").toString
+      val tmp = graft.core.Scratch.dir("graft-json").toString
       graft.io.Formats.writeJsonl(docs, tmp)
       graft.io.Formats.readJsonl(s, tmp, docs.schema).orderBy(col("doc_id"))
     },
@@ -58,7 +58,7 @@ object IoQueries {
     // the gate proves byte-fidelity per column type vs the parquet
     // original) ----
     Gated("q117_csv_roundtrip", (s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-csv").toString
+      val tmp = graft.core.Scratch.dir("graft-csv").toString
       val orders = Tables.orders(s, dir)
       graft.io.Formats.writeCsv(orders, s"$tmp/orders")
       graft.io.Formats.readCsv(s, s"$tmp/orders", orders.schema)
@@ -71,7 +71,7 @@ object IoQueries {
                   o_orderdate, o_orderpriority
            FROM orders ORDER BY o_orderkey"""),
     Gated("q118_jsonl_roundtrip", (s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
+      val tmp = graft.core.Scratch.dir("graft-jsonl").toString
       val ev = Tables.events(s, dir)
       graft.io.Formats.writeJsonl(ev, s"$tmp/events")
       graft.io.Formats.readJsonl(s, s"$tmp/events", ev.schema)
@@ -80,7 +80,7 @@ object IoQueries {
       """SELECT event_id, ts, user_id, event_type, value, props
            FROM events ORDER BY event_id"""),
     Gated("q119_orc_roundtrip", (s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-orc").toString
+      val tmp = graft.core.Scratch.dir("graft-orc").toString
       val li = Tables.lineitem(s, dir)
       graft.io.Formats.writeOrc(li, s"$tmp/lineitem")
       graft.io.Formats.readOrc(s, s"$tmp/lineitem", li.schema)

@@ -65,19 +65,6 @@ object EventMetrics {
         col("window.end").as("window_end"),
         col("event_type"), col("n_events"), col("value_sum"))
 
-  /** Streaming exact dedup with BOUNDED state: duplicates arriving
-    * within the watermark delay collapse; state for keys older than the
-    * watermark is dropped (vs plain `dropDuplicates` on a stream, whose
-    * key set grows forever). Batch datasets short-circuit to plain
-    * `dropDuplicates` — `dropDuplicatesWithinWatermark` requires a
-    * streaming plan. */
-  def dedupWithinWatermark(
-      events: DataFrame, keys: Seq[String], delay: String = "2 hours"): DataFrame =
-    if (events.isStreaming)
-      events.withWatermark("ts", delay)
-        .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-    else events.dropDuplicates(keys)
-
   /** Bound streaming state: drop events later than `delay` behind the
     * max seen ts. Apply before [[tumbling]]/[[sessions]] on a stream. */
   def withStreamingWatermark(events: DataFrame, delay: String = "2 hours"): DataFrame =

@@ -7,6 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Scratch
+
 /** Shared replay construction for the streaming gates: split a batch
   * history into `slices` disjoint increasing time ranges, one parquet
   * file per slice with strictly increasing mtimes, so a
@@ -20,10 +22,14 @@ import org.apache.spark.sql.functions._
   * watermark after slice k is slice k's max event time and every later
   * event lands in a later range, so nothing is ever late-dropped and
   * the streaming result must equal the batch oracle.
+  *
+  * One scratch directory per replay holds the landing (`in/`) and the
+  * stream checkpoint (`ckpt/`).
   */
 private[streaming] final class FileReplay(prefix: String) {
-  val inDir: String = Files.createTempDirectory(s"$prefix-in").toString
-  val checkpointDir: String = Files.createTempDirectory(s"$prefix-ckpt").toString
+  private val root = Scratch.dir(prefix)
+  val inDir: String = Files.createDirectory(root.resolve("in")).toString
+  val checkpointDir: String = Files.createDirectory(root.resolve("ckpt")).toString
   private val stamped = scala.collection.mutable.Set[String]()
   private var nextIdx = 0
 
@@ -73,7 +79,7 @@ private[streaming] final class FileReplay(prefix: String) {
     val sliceIdx = (1 until slices)
       .map(k => when(ms >= bounds(k), 1).otherwise(0))
       .reduceOption(_ + _).getOrElse(lit(0))
-    val tmp = Files.createTempDirectory(s"hist-stage").toString
+    val tmp = Files.createTempDirectory(root, "hist-stage").toString
     try {
       // NULL event times never entered the old per-slice range filters;
       // keep that contract explicit (a `when(ms >= bound)` evaluates a
@@ -103,15 +109,8 @@ private[streaming] final class FileReplay(prefix: String) {
       }
     } finally {
       // the staging dir (committer metadata, _SUCCESS, partition dirs)
-      // would otherwise leak one tree per writeHistory call
-      def rm(p: java.nio.file.Path): Unit = {
-        if (Files.isDirectory(p)) {
-          val ls = Files.list(p)
-          try ls.iterator().asScala.foreach(rm) finally ls.close()
-        }
-        Files.deleteIfExists(p)
-      }
-      rm(Paths.get(tmp))
+      // would otherwise hold one tree per writeHistory call until exit
+      Scratch.delete(Paths.get(tmp))
     }
     (minMs, maxMs)
   }
@@ -131,10 +130,10 @@ private[streaming] object FileReplay {
   /** Run `body` with the replay-tuned session confs applied and
     * restored: state partitioning sized to the state volume
     * ([[stateParts]]), and the trailing NO-DATA micro-batch disabled
-    * (r16, guide §1 measure-first): StreamProbe telemetry read one full
-    * round of per-batch machinery — queryPlanning ~0.1 s, state commits
-    * ~0.25 s task-wall, offset/commit WAL ~0.07 s, addBatch 0.6–0.9 s
-    * total — spent on a batch with ZERO input rows at the end of every
+    * (r16, guide §1 measure-first): per-batch `StreamingQueryProgress`
+    * telemetry read one full round of per-batch machinery —
+    * queryPlanning ~0.1 s, state commits ~0.25 s task-wall,
+    * offset/commit WAL ~0.07 s, addBatch 0.6–0.9 s total — spent on a batch with ZERO input rows at the end of every
     * replay. Each harness is engineered so its final emission rides a
     * DATA batch (inner joins emit on arrival; the stateful gates close
     * every real key in the second far-future sentinel's batch — their

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.bindings.SessionCache
+import graft.core.Scratch
 
 /** Streaming→lakehouse bridge for the incremental gold maintainers: the
   * withheld CDC day arrives as a REAL file-source stream, and every
@@ -90,7 +89,7 @@ object IncrementalGoldStream {
     prepCache.getOrElseUpdate(spark, (dir, slices)) {
       val revenue = graft.bindings.Conformed.orderRevenueCached(spark, dir)
       val d = to_date(lit(graft.gold.IncrementalReplay.replayDate))
-      val root = Files.createTempDirectory("graft-incr-stream-base").toString
+      val root = Scratch.dir("graft-incr-stream-base").toString
       val basePath = s"$root/base"
       val inDir = s"$root/in"
       revenue.filter(col("creation_date") =!= d)
@@ -126,7 +125,7 @@ object IncrementalGoldStream {
       val (basePath, inDir) = preparedInputs(spark, dir, slices)
       val delta = spark.read.parquet(inDir)
 
-      val root = Files.createTempDirectory("graft-incr-stream").toString
+      val root = Scratch.dir("graft-incr-stream").toString
       // silver = immutable shared base ∪ this run's append zone — the
       // ingest write lands ONLY in the per-run zone, so runs stay
       // isolated without copying the 600k-row base per query

@@ -15,7 +15,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      graft.core.Scratch.dir("graft-warehouse").toString)
     .getOrCreate()
 
   override protected def afterAll(): Unit = {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * "141/141 pass" because failures were silently skipped. */
 class VerifyContractSpec extends SparkSpec {
   test("dumpAll writes a _FAILED sentinel and reports the failing query") {
-    val out = Files.createTempDirectory("graft-verify-contract").toString
+    val out = graft.core.Scratch.dir("graft-verify-contract").toString
     val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
       "ok_query" -> ((s: SparkSession, _: String) => {
         import s.implicits._

@@ -50,7 +50,10 @@ class SnapshotDiffSpec extends SparkSpec {
 
   test("bootstrap: empty previous tags everything insert") {
     val cur = df((1, Some("a"), Some(1.0)), (2, Some("b"), None))
-    val got = actions(SnapshotDiff(cur, SnapshotDiff.emptyLike(cur), Seq("id"), ts))
+    // the first run's previous snapshot: an absent path read as empty
+    val absent = graft.core.Scratch.dir("snapshot").resolve("absent").toString
+    val prev = graft.io.ParquetSource.readOrEmpty(spark, absent, cur)
+    val got = actions(SnapshotDiff(cur, prev, Seq("id"), ts))
     assert(got == Map("insert" -> Set(1, 2)))
   }
 

@@ -1,7 +1,5 @@
 package graft.cdc
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -10,7 +8,7 @@ class WatermarkSpec extends SparkSpec {
   import spark.implicits._
 
   private def newStore(): ControlStore = {
-    val dir = Files.createTempDirectory("graft-control").toString
+    val dir = graft.core.Scratch.dir("graft-control").toString
     new ControlStore(spark.sparkContext.hadoopConfiguration, s"file://$dir")
   }
 
@@ -29,7 +27,7 @@ class WatermarkSpec extends SparkSpec {
     // atomic-move put bypasses ChecksumFileSystem, so unless put()
     // deletes the target's own sidecar too, the next checksummed read
     // raises ChecksumException instead of returning the new value.
-    val dir = Files.createTempDirectory("graft-control-crc").toString
+    val dir = graft.core.Scratch.dir("graft-control-crc").toString
     val conf = spark.sparkContext.hadoopConfiguration
     val store = new ControlStore(conf, s"file://$dir")
     val p = new org.apache.hadoop.fs.Path(s"file://$dir/silver/last_run.txt")

@@ -20,19 +20,6 @@ class DedupSpec extends SparkSpec {
     assert(got == Set((1, 2L)))
   }
 
-  test("exact full-row dup groups ignore key-only duplicates") {
-    val df = Seq((1, "a"), (1, "a"), (1, "b"), (2, "c")).toDF("k", "v")
-    val got = Dedup.exactRowGroups(df).as[(Int, String, Long)].collect().toSet
-    assert(got == Set((1, "a", 2L)))
-  }
-
-  test("exact content dedup keeps min id per distinct text") {
-    val got = Dedup.exactByContent(docs, "doc_id", "text")
-      .filter($"dup_count" > 1)
-      .select($"canonical_id", $"dup_count").as[(Long, Long)].collect().toSet
-    assert(got == Set((1L, 2L))) // docs 1 and 4 collapse, canonical = 1
-  }
-
   test("minhash+LSH surfaces the exact and near duplicates, not the unrelated doc") {
     val pairs = Dedup.minhashNearDups(docs, "doc_id", "text", minEst = 0.5)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet

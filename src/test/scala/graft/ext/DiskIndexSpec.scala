@@ -42,7 +42,7 @@ class DiskIndexSpec extends SparkSpec {
     // stamp and its own index, whose probe must still match the
     // original's results exactly (same bytes), proving dir2's build
     // did not clobber dir1's live table.
-    val copy = java.nio.file.Files.createTempDirectory("graft-corpus-copy")
+    val copy = graft.core.Scratch.dir("graft-corpus-copy")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       copy.resolve("documents.parquet"))
@@ -71,8 +71,7 @@ class DiskIndexSpec extends SparkSpec {
     assert(exchangesBucketed == 0,
       s"bucketed index must not re-shuffle on term:\n$bucketedPlan")
     // contrast: the same rows written as PLAIN parquet must exchange
-    val flat = java.nio.file.Files
-      .createTempDirectory("graft-lexidx-flat").toString
+    val flat = graft.core.Scratch.dir("graft-lexidx-flat").toString
     disk.write.mode("overwrite").parquet(flat)
     val flatPlan = planText(
       Retrieval.impactTruncate(spark.read.parquet(flat), 100))

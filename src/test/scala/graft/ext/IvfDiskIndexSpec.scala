@@ -48,8 +48,7 @@ class IvfDiskIndexSpec extends SparkSpec {
       assert(shuffles(bucketedPlan) == 0,
         s"bucketed index must not re-shuffle on cell:\n$bucketedPlan")
       // contrast: the same rows written as PLAIN parquet must exchange
-      val flat = java.nio.file.Files
-        .createTempDirectory("graft-ivfidx-flat").toString
+      val flat = graft.core.Scratch.dir("graft-ivfidx-flat").toString
       disk.write.mode("overwrite").parquet(flat)
       val flatPlan = planText(
         Similarity.ivfTopKFromAssigned(spark.read.parquet(flat), 5))
@@ -88,8 +87,7 @@ class IvfDiskIndexSpec extends SparkSpec {
       c.groupBy(col("cell")).agg(countDistinct(col("vec_id")).as("n"))
     assert(shuffles(planText(occupancy(codes))) == 0,
       "bucketed codes must feed a cell aggregate with no exchange")
-    val flat = java.nio.file.Files
-      .createTempDirectory("graft-ivfpqidx-flat").toString
+    val flat = graft.core.Scratch.dir("graft-ivfpqidx-flat").toString
     codes.write.mode("overwrite").parquet(flat)
     assert(shuffles(planText(occupancy(spark.read.parquet(flat)))) >= 1,
       "un-bucketed control must shuffle for the cell aggregate")

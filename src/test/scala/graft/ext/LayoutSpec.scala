@@ -35,20 +35,4 @@ class LayoutSpec extends SparkSpec {
       assert(maxA - minA == 7L && maxB - minB == 7L)
     }
   }
-
-  test("layoutByZ yields non-overlapping z-ranges across partitions") {
-    val rnd = new scala.util.Random(11)
-    val rows = Seq.fill(2000)((rnd.nextInt(1024).toLong, rnd.nextInt(1024).toLong))
-    val laid = Layout.layoutByZ(rows.toDF("a", "b"), "a", "b", bits = 10, partitions = 8)
-    val ranges = laid
-      .withColumn("z", Layout.zValue($"a", $"b", 10))
-      .withColumn("p", spark_partition_id())
-      .groupBy("p").agg(min($"z").as("lo"), max($"z").as("hi"))
-      .orderBy("lo")
-      .select($"lo", $"hi").as[(Long, Long)].collect()
-    ranges.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) => assert(hi1 <= lo2, "partition z-ranges overlap")
-      case _ =>
-    }
-  }
 }

@@ -1,6 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
 import scala.sys.process._
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
@@ -23,7 +22,7 @@ class DashboardContractSpec extends SparkSpec {
     assume(pyAvailable, "python3+pyarrow+pandas not available")
     assume(new java.io.File("/root/testdata/sf0.001").isDirectory)
     val sfDir = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("graft-dash").toString
+    val root = graft.core.Scratch.dir("graft-dash").toString
     val mart = graft.gold.Rfm.anchoredAt(
       graft.core.Tables.orders(spark, sfDir)
         .select(col("o_custkey").as("user_id"),

@@ -95,7 +95,7 @@ class JdbcIntegrationSpec extends SparkSpec {
   }
 
   test("two-run watermark replay through the live endpoint: union of runs == fresh full read") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-jdbc-replay")
+    val tmp = graft.core.Scratch.dir("graft-jdbc-replay")
     val store = new ControlStore(
       spark.sparkContext.hadoopConfiguration, tmp.toString)
     val sinkDir = s"$tmp/bronze"

@@ -22,7 +22,7 @@ class CdcPipelineSpec extends SparkSpec {
     orderCols = Seq(col("option_price")))
 
   test("bronze -> silver -> gold end-to-end on sf0.001, incremental no-op on rerun") {
-    val root = Files.createTempDirectory("graft-lake").toString
+    val root = graft.core.Scratch.dir("graft-lake").toString
     val lake = Lakehouse(s"file://$root")
     val pipe = new CdcPipeline(spark, lake)
 
@@ -246,7 +246,7 @@ class CdcPipelineSpec extends SparkSpec {
     val t = lit(boundary).cast("timestamp")
     assert(items.filter(col("creation_ts") === t).count() > 0,
       s"fixture must hold rows stamped $boundary")
-    val root = Files.createTempDirectory("graft-lake-boundary").toString
+    val root = graft.core.Scratch.dir("graft-lake-boundary").toString
     val lake = Lakehouse(s"file://$root")
     val pipe = new CdcPipeline(spark, lake)
 
@@ -272,7 +272,7 @@ class CdcPipelineSpec extends SparkSpec {
 
   test("a mart that fails to refresh leaves its siblings refreshed; the rerun converges") {
     val items = Conformed.items(spark, sf)
-    val root = Files.createTempDirectory("graft-lake-fault").toString
+    val root = graft.core.Scratch.dir("graft-lake-fault").toString
     val lake = Lakehouse(s"file://$root")
     val pipe = new CdcPipeline(spark, lake)
     val day2 = "1996-01-03 00:00:00"
@@ -310,7 +310,7 @@ class CdcPipelineSpec extends SparkSpec {
   }
 
   test("a snapshot swap that died between delete and rename is finished on rerun") {
-    val root = Files.createTempDirectory("graft-lake-swap").toString
+    val root = graft.core.Scratch.dir("graft-lake-swap").toString
     val lake = Lakehouse(s"file://$root")
     val pipe = new CdcPipeline(spark, lake)
     val pk = Seq("order_id", "lineitem_id", "option_name")

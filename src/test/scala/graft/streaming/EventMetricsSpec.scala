@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -53,29 +51,8 @@ class EventMetricsSpec extends SparkSpec {
       ("2024-01-01 00:45:00", "2024-01-01 01:45:00", 1L)))
   }
 
-  test("streaming dedup within watermark collapses duplicate keys across batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String, Double)]
-    val events = input.toDF().toDF("event_id", "tss", "value")
-      .withColumn("ts", to_timestamp($"tss")).drop("tss")
-    val deduped = EventMetrics.dedupWithinWatermark(events, Seq("event_id"), "1 hour")
-    val q = deduped.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append").start()
-    try {
-      input.addData((1L, "2024-01-01 00:05:00", 1.0), (1L, "2024-01-01 00:05:00", 1.0))
-      q.processAllAvailable()
-      input.addData((1L, "2024-01-01 00:10:00", 9.0), (2L, "2024-01-01 00:11:00", 2.0))
-      q.processAllAvailable()
-      val ids = spark.table("dedup_stream").select($"event_id").as[Long]
-        .collect().toSeq.sorted
-      assert(ids == Seq(1L, 2L),
-        s"duplicate event_id=1 must collapse across batches, got $ids")
-    } finally q.stop()
-  }
-
   test("the same transform runs as a structured stream and matches the batch result") {
-    val dir = Files.createTempDirectory("graft-stream-in").toString
+    val dir = graft.core.Scratch.dir("graft-stream-in").toString
     eventsDf.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(eventsDf.schema).parquet(dir)
     val q = EventMetrics.tumbling(EventMetrics.withStreamingWatermark(stream, "2 hours"))

@@ -160,9 +160,9 @@ class StreamingCdcIngestSpec extends SparkSpec {
   import spark.implicits._
 
   test("streaming ingest lands micro-batches in the cdc zone layout") {
-    val src = Files.createTempDirectory("graft-stream-src").toString
-    val root = Files.createTempDirectory("graft-stream-lake").toString
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
+    val src = graft.core.Scratch.dir("graft-stream-src").toString
+    val root = graft.core.Scratch.dir("graft-stream-lake").toString
+    val ckpt = graft.core.Scratch.dir("graft-stream-ckpt").toString
     val data = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "payload")
     data.write.mode("overwrite").parquet(src)
 
